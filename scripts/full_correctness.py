@@ -422,7 +422,7 @@ def main() -> int:
         )
         return cols, n, dig
 
-    def _spark_digest(sdf) -> tuple[int, str]:
+    def _spark_digest(name: str, sdf) -> tuple[int, str]:
         """(row_count, digest) of a Spark result, computed DISTRIBUTED.
 
         The digest is a commutative 256-bit modular sum of per-row
@@ -469,7 +469,13 @@ def main() -> int:
 
         try:
             parts = sdf.mapInArrow(part, "n long, tot binary").collect()
-        except Exception:
+        except Exception as e:  # noqa: BLE001 — serial path still attests
+            print(
+                f"WARN {name}: mapInArrow digest failed, digesting serially: "
+                f"{type(e).__name__}: {str(e)[:300]}",
+                file=sys.stderr,
+                flush=True,
+            )
             return canonical_digest(cols, sdf.toLocalIterator())
         n = sum(p.n for p in parts)
         total = sum(int.from_bytes(bytes(p.tot), "big") for p in parts) & mask
@@ -477,71 +483,75 @@ def main() -> int:
 
     out: dict[str, dict] = {}
     t_start = time.time()
-    for name, d in REGISTRY.items():
-        if only is not None and name not in only:
-            continue
-        rec = {
-            "rows_match": False,
-            "schema_match": False,
-            "hash_match": False,
-            "spark_rows": None,
-            "oracle_rows": None,
-            "err": None,
-            # Pins WHICH oracle and WHICH implementation this green row
-            # attests: a later edit to either invalidates the row
-            # (tests/test_artifact_sync.py asserts both stored hashes
-            # match the live registry), so neither a changed oracle nor
-            # a changed implementation can ride on a stale green.
-            "oracle_sha": _oracle_sha(d.sql),
-            "impl_sha": _impl_sha(d.fn),
-        }
-        try:
-            sdf = d.fn(spark, sf_dir)
-            s_cols = sdf.columns
-            # Distributed digest: per-partition canonical sha256 sums
-            # combined on the driver (commutative) — giant results need
-            # neither a big driver nor a serial row loop.
-            s_n, s_dig = _spark_digest(sdf)
-            rec["spark_rows"] = s_n
-            if d.sql is None:
-                # No comparison performed: rows_match stays False; the
-                # record only attests the query executed without error.
-                rec["err"] = "no_oracle"
-                rec["executed"] = True
-            else:
-                try:
-                    d_cols, d_n, d_dig = _oracle_digest(d.sql)
-                except duckdb.InterruptException:
-                    rec["err"] = f"oracle_timeout>{timeout_s:g}s"
-                    # Record the cap numerically so a later run with a
-                    # RAISED cap treats this row as stale and retries it.
-                    rec["oracle_timeout_s"] = timeout_s
+    # The fork pool's workers must not outlive the sweep, also when a
+    # query raises out of the loop (KeyboardInterrupt, a Spark crash).
+    try:
+        for name, d in REGISTRY.items():
+            if only is not None and name not in only:
+                continue
+            rec = {
+                "rows_match": False,
+                "schema_match": False,
+                "hash_match": False,
+                "spark_rows": None,
+                "oracle_rows": None,
+                "err": None,
+                # Pins WHICH oracle and WHICH implementation this green row
+                # attests: a later edit to either invalidates the row
+                # (tests/test_artifact_sync.py asserts both stored hashes
+                # match the live registry), so neither a changed oracle nor
+                # a changed implementation can ride on a stale green.
+                "oracle_sha": _oracle_sha(d.sql),
+                "impl_sha": _impl_sha(d.fn),
+            }
+            try:
+                sdf = d.fn(spark, sf_dir)
+                s_cols = sdf.columns
+                # Distributed digest: per-partition canonical sha256 sums
+                # combined on the driver (commutative) — giant results need
+                # neither a big driver nor a serial row loop.
+                s_n, s_dig = _spark_digest(name, sdf)
+                rec["spark_rows"] = s_n
+                if d.sql is None:
+                    # No comparison performed: rows_match stays False; the
+                    # record only attests the query executed without error.
+                    rec["err"] = "no_oracle"
                     rec["executed"] = True
-                    out[name] = rec
-                    print(f"DNF  {name} (oracle >{timeout_s:g}s)", flush=True)
-                    continue
-                rec["oracle_rows"] = d_n
-                rec["rows_match"] = s_n == d_n
-                rec["schema_match"] = sorted(s_cols) == sorted(d_cols)
-                if rec["rows_match"] and rec["schema_match"]:
-                    rec["hash_match"] = s_dig == d_dig
-        except Exception as e:  # noqa: BLE001 — record, keep going
-            rec["err"] = f"{type(e).__name__}: {e}"[:300]
-            traceback.print_exc()
-        out[name] = rec
-        flag = "OK" if (rec["hash_match"] or rec["err"] == "no_oracle") else "FAIL"
-        print(f"{flag:4s} {name} ({rec['spark_rows']} rows)", flush=True)
-        if shard_suffix is not None:
-            # Crash-safe checkpoint: one lost row max per shard.
-            with open(artifact + shard_suffix, "w") as f:
-                json.dump(out, f, indent=1)
+                else:
+                    try:
+                        d_cols, d_n, d_dig = _oracle_digest(d.sql)
+                    except duckdb.InterruptException:
+                        rec["err"] = f"oracle_timeout>{timeout_s:g}s"
+                        # Record the cap numerically so a later run with a
+                        # RAISED cap treats this row as stale and retries it.
+                        rec["oracle_timeout_s"] = timeout_s
+                        rec["executed"] = True
+                        out[name] = rec
+                        print(f"DNF  {name} (oracle >{timeout_s:g}s)", flush=True)
+                        continue
+                    rec["oracle_rows"] = d_n
+                    rec["rows_match"] = s_n == d_n
+                    rec["schema_match"] = sorted(s_cols) == sorted(d_cols)
+                    if rec["rows_match"] and rec["schema_match"]:
+                        rec["hash_match"] = s_dig == d_dig
+            except Exception as e:  # noqa: BLE001 — record, keep going
+                rec["err"] = f"{type(e).__name__}: {e}"[:300]
+                traceback.print_exc()
+            out[name] = rec
+            ok = rec["hash_match"] or rec["err"] == "no_oracle"
+            flag = "OK" if ok else "FAIL"
+            print(f"{flag:4s} {name} ({rec['spark_rows']} rows)", flush=True)
+            if shard_suffix is not None:
+                # Crash-safe checkpoint: one lost row max per shard.
+                with open(artifact + shard_suffix, "w") as f:
+                    json.dump(out, f, indent=1)
+    finally:
+        if _pool_holder[0] is not None:
+            _pool_holder[0].terminate()
+            _pool_holder[0] = None
 
     def _is_timeout(r: dict) -> bool:
         return str(r.get("err") or "").startswith("oracle_timeout")
-
-    if _pool_holder[0] is not None:
-        _pool_holder[0].terminate()
-        _pool_holder[0] = None
 
     if only is not None and not update and shard_suffix is None:
         print(json.dumps(out, indent=1))

@@ -129,8 +129,7 @@ def main() -> int:
         # artifact-only. A dirty attested file — including the harness
         # itself (scripts/full_correctness.py, tests/oracle.py), which
         # the impl_sha/oracle_sha pins below do NOT cover — refuses the
-        # merge (ADVICE r14).
-        harness_files = ("scripts/full_correctness.py", "tests/oracle.py")
+        # merge (ADVICE r14): only CORRECTNESS_FULL_* files pass.
         for m in shard_metas:
             if not m.get("git_dirty"):
                 continue
@@ -144,7 +143,6 @@ def main() -> int:
                 p
                 for p in recorded
                 if not os.path.basename(p).startswith("CORRECTNESS_FULL_")
-                or p in harness_files
             ]
             if non_artifact:
                 raise SystemExit(

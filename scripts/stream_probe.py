@@ -10,7 +10,9 @@ concurrently for ``--duration`` seconds, samples every query's
 
 - per-stage sustained throughput (median + max of the per-batch
   ``processedRowsPerSecond`` across the steady-state window),
-- rows landed per layer,
+- rows and data files landed per layer (the file count shows a
+  regression in sink layout, e.g. gold no longer clustered by its
+  partition columns),
 - the silver dedup and gold window state-store footprint
   (``stateOperators[].numRowsTotal`` / ``memoryUsedBytes`` from the last
   progress of each stage — the number that decides whether watermarked
@@ -198,16 +200,19 @@ def run_probe(
             ]
         out[name] = rec
 
-    def landed(path: str) -> int:
+    def landed(path: str) -> tuple[int, int]:
+        """(rows, data files) committed to a sink; the files come from the
+        sink's metadata log, so uncommitted leftovers do not count."""
         # A short run can legitimately land nothing in gold (append mode
         # emits a window only after the watermark passes its end).
         try:
-            return spark.read.parquet(path).count()
+            df = spark.read.parquet(path)
+            return df.count(), len(df.inputFiles())
         except Exception:
-            return 0
+            return 0, 0
 
-    out["gold_rows_landed"] = landed(gold_dir)
-    out["silver_rows_landed"] = landed(silver_dir)
+    for layer, path in (("gold", gold_dir), ("silver", silver_dir)):
+        out[f"{layer}_rows_landed"], out[f"{layer}_files_landed"] = landed(path)
     return out
 
 

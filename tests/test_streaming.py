@@ -13,9 +13,17 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from crypto_streaming_lakehouse_spark.schemas import BRONZE_SCHEMA, DEDUP_KEY
+from crypto_streaming_lakehouse_spark.operators.bars import ohlcv_bars
+from crypto_streaming_lakehouse_spark.schemas import (
+    BRONZE_SCHEMA,
+    DEDUP_KEY,
+    SILVER_SCHEMA,
+)
+from crypto_streaming_lakehouse_spark.sources.formats import stream_writer
 from crypto_streaming_lakehouse_spark.sources.tables import events_as_trades
 from crypto_streaming_lakehouse_spark.streaming.pipeline import (
+    GOLD_PARTITION_BY,
+    configure_state_store,
     run_batch_pipeline,
     start_gold_job,
     start_silver_job,
@@ -71,6 +79,14 @@ def _rowset(df, cols):
     trips INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND in Spark 4.1 — compare
     driver-side instead; fixtures are small)."""
     return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+#: Days of silver appended per write by _append_silver; gold tests cap
+#: files per trigger at a multiple of it, so batch boundaries fall on
+#: write boundaries.
+_DAYS_PER_WRITE = 5
+_GOLD_COLS = ["symbol", "bar_start", "bar_end", "open", "high", "low",
+              "close", "volume", "vwap", "trades"]
 
 
 def test_state_store_default_is_rocksdb_with_changelog(
@@ -175,10 +191,8 @@ def test_gold_stream_is_watermark_closed_prefix_of_batch(spark, bronze_dir):
     batch = run_batch_pipeline(_read_bronze(spark, bronze))
 
     # every streamed bar matches its batch twin exactly
-    cols = ["symbol", "bar_start", "bar_end", "open", "high", "low", "close",
-            "volume", "vwap", "trades"]
-    s_rows = set(_rowset(streamed, cols))
-    b_rows = set(_rowset(batch, cols))
+    s_rows = set(_rowset(streamed, _GOLD_COLS))
+    b_rows = set(_rowset(batch, _GOLD_COLS))
     assert s_rows <= b_rows
 
     # the stream withholds only bars still open w.r.t. the final watermark
@@ -189,6 +203,166 @@ def test_gold_stream_is_watermark_closed_prefix_of_batch(spark, bronze_dir):
     n_closed = batch.where(F.col("bar_end") <= wm).count()
     assert streamed.count() >= n_closed
     assert 0 < streamed.count() <= batch.count()
+
+
+def _silver_writes(spark, bronze):
+    """Batch silver of the bronze fixture and its days, in groups of
+    ``_DAYS_PER_WRITE``, oldest first."""
+    silver = dedup_trades(bronze_to_silver(_read_bronze(spark, bronze)))
+    days = sorted(r[0] for r in silver.select("event_date").distinct().collect())
+    groups = [
+        days[i : i + _DAYS_PER_WRITE]
+        for i in range(0, len(days), _DAYS_PER_WRITE)
+    ]
+    return silver, groups
+
+
+def _append_silver(silver, path, groups):
+    """Append silver one group of days per write, one file per day. The
+    file source reads files in modification-time order, so here that is
+    event-time order: under a files-per-trigger cap that is a multiple of
+    the group size no row lands behind the watermark, and every batch
+    schedule emits the same bars."""
+    for days in groups:
+        (
+            silver.where(F.col("event_date").isin(days))
+            .coalesce(1)
+            .write.mode("append")
+            .partitionBy("event_date")
+            .parquet(path)
+        )
+
+
+def _sink_files_by_batch(sink_dir):
+    """{batch_id: [data file path]} from the file sink's metadata log —
+    the files each committed micro-batch added."""
+    import json
+    import os
+    from urllib.parse import unquote, urlparse
+
+    log = os.path.join(sink_dir, "_spark_metadata")
+    out = {}
+    for name in os.listdir(log):
+        if name.startswith("."):  # checksum files
+            continue
+        assert name.isdigit(), f"unexpected sink log entry {name}"
+        with open(os.path.join(log, name)) as f:
+            lines = f.read().splitlines()[1:]  # first line is the version
+        out[int(name)] = [
+            unquote(urlparse(json.loads(ln)["path"]).path) for ln in lines
+        ]
+    return out
+
+
+def test_gold_stream_writes_one_file_per_partition_per_batch(
+    spark, bronze_dir, tmp_path
+):
+    """The gold stream is clustered by its sink partitions: a micro-batch
+    writes at most one file into each (bar_date, symbol) directory, so no
+    directory holds more files than the micro-batches that wrote to it.
+    Unclustered, each stateful-aggregate task wrote its own file into
+    every directory it had bars for."""
+    import collections
+    import os
+
+    _, bronze = bronze_dir
+    silver, groups = _silver_writes(spark, bronze)
+    silver_dir = str(tmp_path / "silver")
+    _append_silver(silver, silver_dir, groups)
+    gold_dir = str(tmp_path / "gold")
+    q = start_gold_job(
+        spark,
+        silver_dir=silver_dir,
+        gold_dir=gold_dir,
+        checkpoint=str(tmp_path / "ckpt_gold"),
+        max_files_per_trigger=2 * _DAYS_PER_WRITE,
+    )
+    assert q.awaitTermination(120)
+    assert sum(1 for p in q.recentProgress if p.numInputRows > 0) >= 2
+
+    writers = collections.defaultdict(set)  # directory -> batch ids
+    for batch_id, files in _sink_files_by_batch(gold_dir).items():
+        per_dir = collections.Counter(os.path.dirname(f) for f in files)
+        assert max(per_dir.values(), default=0) <= 1, (batch_id, per_dir)
+        for d in per_dir:
+            writers[d].add(batch_id)
+    assert len(writers) > 1
+    layout = f"{'=*/'.join(GOLD_PARTITION_BY)}=*"
+    on_disk = {str(d) for d in tmp_path.joinpath("gold").glob(layout)}
+    assert on_disk == set(writers)
+    for d, batch_ids in writers.items():
+        n_files = sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
+        assert n_files <= len(batch_ids), d
+
+    streamed = spark.read.parquet(gold_dir)
+    batch = run_batch_pipeline(_read_bronze(spark, bronze))
+    s_rows = _rowset(streamed, _GOLD_COLS)
+    assert s_rows
+    assert set(s_rows) <= set(_rowset(batch, _GOLD_COLS))
+
+
+def test_gold_restart_from_unclustered_checkpoint(spark, bronze_dir, tmp_path):
+    """A gold checkpoint written by the unclustered plan (the windowed
+    aggregate straight into the sink) restarts under start_gold_job: the
+    added exchange is stateless and sits after the state store, so the
+    restored windows finish where they left off. The result has no
+    duplicate bars and equals one uninterrupted run over the same files."""
+    _, bronze = bronze_dir
+    silver, groups = _silver_writes(spark, bronze)
+    assert len(groups) >= 5
+    silver_dir = str(tmp_path / "silver")
+    gold_dir = str(tmp_path / "gold")
+    ckpt = str(tmp_path / "ckpt_gold")
+    cap = 2 * _DAYS_PER_WRITE
+
+    # phase 1: the unclustered plan drains the first four groups (two
+    # micro-batches) and stops with the last bars still open in state
+    _append_silver(silver, silver_dir, groups[:4])
+    configure_state_store(spark)
+    silver_stream = (
+        spark.readStream.schema(SILVER_SCHEMA)
+        .option("maxFilesPerTrigger", cap)
+        .parquet(silver_dir)
+    )
+    q1 = stream_writer(
+        ohlcv_bars(silver_stream.withWatermark("event_time", "2 minutes")),
+        path=gold_dir,
+        checkpoint=ckpt,
+        partition_by=list(GOLD_PARTITION_BY),
+    ).start()
+    assert q1.awaitTermination(120)
+    assert sum(1 for p in q1.recentProgress if p.numInputRows > 0) == 2
+    partial = spark.read.parquet(gold_dir).count()
+
+    # phase 2: more silver arrives; the clustered job resumes the checkpoint
+    _append_silver(silver, silver_dir, groups[4:])
+    q2 = start_gold_job(
+        spark,
+        silver_dir=silver_dir,
+        gold_dir=gold_dir,
+        checkpoint=ckpt,
+        max_files_per_trigger=cap,
+    )
+    assert q2.awaitTermination(120)
+    assert q2.recentProgress[0].batchId > 0  # resumed, not restarted
+
+    fresh_dir = str(tmp_path / "gold_fresh")
+    q3 = start_gold_job(
+        spark,
+        silver_dir=silver_dir,
+        gold_dir=fresh_dir,
+        checkpoint=str(tmp_path / "ckpt_fresh"),
+        max_files_per_trigger=cap,
+    )
+    assert q3.awaitTermination(120)
+
+    restarted = spark.read.parquet(gold_dir)
+    n = restarted.count()
+    assert 0 < partial < n
+    assert restarted.select("symbol", "bar_start").distinct().count() == n
+    assert _rowset(restarted, _GOLD_COLS) == _rowset(
+        spark.read.parquet(fresh_dir), _GOLD_COLS
+    )
 
 
 def test_backfill_then_stream(spark, bronze_dir, tmp_path):
@@ -1023,6 +1197,9 @@ def test_stream_probe_short(spark, tmp_path):
         out = attempt(25, "p2")
     assert out["bronze"]["rows_processed"] > 0
     assert out["silver_rows_landed"] > 0
+    # Sink layout is reported next to the row counts.
+    assert out["silver_files_landed"] > 0
+    assert out["gold_files_landed"] <= out["gold_rows_landed"]
     # The silver stage's dedup and the gold stage's window agg both keep
     # watermarked state; at least one stage must report it.
     assert any(
