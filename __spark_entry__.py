@@ -11,184 +11,26 @@ only adapts the registry to the driver contract.
 Ordering policy — driver verification is CAPPED at the first 50 entries
 of ``queries()`` (empirical: CORRECTNESS_r01 and _r02 each contain exactly
 the first 50 names in dict order, r02 with zero errors — so the stop is a
-cap, not a crash).  With 224 registered queries (point-in-time count; see
-README), we therefore ROTATE which 50 lead the dict each round so that
-cumulative driver-verified coverage grows round over round:
+cap, not a crash). We therefore ROTATE which 50 lead the dict each round,
+so that driver evidence lands where it is missing or stale:
 
-- r01+r02 verified the 50 core relational queries (registry.py +
-  registry_breadth.py head) — all green in CORRECTNESS_r02.json.
-- r03 led with the 50 extension queries (registry_ext, registry_llm,
-  registry_round3, registry_quant) — all green in CORRECTNESS_r03.json.
-  Cumulative driver-verified after r03: 103/202.
-- r04 led with the next 50: registry_sql (22) + registry_patterns (6) +
-  registry_tpch (4) + q_percentile (1) + the first 17 of registry_round2
-  — 49/50 green in CORRECTNESS_r04.json (q_decimal_exact rows+schema
-  green, hash red on driver DECIMAL canonicalization — fixed this round
-  by emitting pinned-scale strings; re-included below).
-  Cumulative driver-verified after r04: 153/206.
-- r05 (this round) leads with never-driver-GREEN names: the
-  registry_round2 tail, registry_round3b (incl. q_dedup_semantic), the
-  4 registry_round4 queries, the 2 redesigned verdict oracles that
-  errored pre-redesign in r01 (q_approx_count_distinct /
-  q_percentile_approx), plus the fixed q_decimal_exact re-include = 50.
-  Deferred to r06 (lowest-risk tail): the 4 UDF-tier twins
-  (q_symbol_normalize_pandas_udf / q_symbol_normalize_arrow_udf /
-  q_weighted_avg_pandas_udaf / q_embedding_norms_arrow — each shares
-  its oracle with an already-driver-green native spelling) and 2
-  exact-SQL shapes (q_explode_outer, q_set_ops_all).
-- r05's driver verify never produced a CORRECTNESS_r05.json artifact
-  (infra: no verdict/bench artifacts for that round either), so the
-  r05 head remains driver-unverified.  r06 therefore keeps the r05
-  head, swapping in the 4 round-5 additions (q_bloom_membership /
-  q_url_normalize / q_dedup_containment / q_repeated_substrings) for
-  the 4 lowest-risk r05 slots (q_seasonal_dow / q_higher_order_array /
-  q_welch_ttest / q_gini — each a simple agg/expression shape whose
-  close cousins are already driver-green).  Deferred to r07: those 4,
-  the 4 UDF-tier twins (q_symbol_normalize_pandas_udf /
-  q_symbol_normalize_arrow_udf / q_weighted_avg_pandas_udaf /
-  q_embedding_norms_arrow — each shares its oracle with an
-  already-driver-green native spelling), 2 exact-SQL shapes
-  (q_explode_outer, q_set_ops_all), and any round-6 additions.
+- ``_ROUND_HEAD`` leads the dict, in its own order: first the names that
+  have never been driver-green, then ``_ROUND_CHANGED`` (names whose
+  implementation or oracle changed after their last green row, which
+  re-earn hashes on current code), then the least-verified names
+  (fewest green rows, earliest round first) to fill the 50 slots.
+- ``tests/test_rotation.py`` pins the head: exactly 50 unique names, all
+  registered with oracles, spending slots only on those groups (checked
+  against the per-round green ledger in
+  ``tests/driver_verified_ledger.json``).
+- The rest of the registry follows; rows-only queries (no oracle) last.
+
+Which names led which round, and why, is recorded in git history.
 
 The FULL query surface is hash-verified locally every round at the
 driver's own gate scale (sf0.01) by ``scripts/full_correctness.py`` →
 ``CORRECTNESS_FULL_LOCAL.json`` (same per-query record shape as the
 driver's file), and by ``tests/test_oracle_queries.py`` in CI.
-
-- r07's head went 50/50 green (CORRECTNESS_r07.json, zero err) —
-  cumulative driver-verified after r07: 249/267.
-- r08 (this round) leads with the full never-driver-verified pool:
-  the 18 round-7 additions (registry_round7b: q_roll_spread,
-  q_amihud_illiquidity, q_hhi_concentration, q_theil_index,
-  q_tokenizer_fertility, q_ngram_novelty; registry_round7c:
-  q_hierarchy_depth, q_basket_lift, q_weighted_median,
-  q_kaplan_meier; registry_round7d: q_poisson_bootstrap,
-  q_changepoint_split; registry_round7e: q_ipw_ate, q_did_estimate,
-  q_rolling_stats_chunked, q_spearman_corr, q_esd_outliers,
-  q_quantile_normalize) plus the 10 round-8 additions
-  (registry_round8): 3 snapshot-table-layer queries
-  (q_snapshot_prune_read, q_snapshot_time_travel, q_snapshot_growth —
-  the snapshot format's first oracle rows, VERDICT r07 item 4) and 7
-  analytics operators (q_var_es, q_capm_beta, q_anova_oneway,
-  q_benjamini_hochberg, q_jensen_shannon, q_attribution_last_touch,
-  q_kendall_tau_topk) and a second round-8 batch of 6 (q_jarque_bera,
-  q_ljung_box, q_revenue_deciles, q_dup_cluster_hist,
-  q_rolling_distinct_users, q_cohort_ltv) and a third batch of 6
-  (q_langid_confusion, q_user_activity_entropy, q_ship_leadtime,
-  q_ma_crossover, q_rfm_segments, q_inter_purchase_time) and a fourth
-  batch of 5 (q_basket_size_hist, q_activity_heatmap,
-  q_price_dispersion, q_session_count_hist, q_repeat_rate). Pool (45)
-  < 50, so per tests/test_rotation.py the head is exactly that pool.
-  Done = CORRECTNESS_r08.json 45/45 green; cumulative 294/294.
-- r09 (this round): the never-driver-green pool emptied at r08, so the
-  head is exactly the 25 round-9 additions (registry_round9; pool < 50
-  ⇒ head == pool): 12 analytics/graph/PCA/featurization operators, 6
-  in-engine ML training/eval operators, the snapshot-layer schema-
-  evolution read, the dup-cluster-aware split, 2 tabular-ML
-  feature/split tools, the elasticity + model-calibration pair, and a
-  histogram-split decision stump.
-  Every one is hash-green locally at BOTH sf0.01 and sf0.1
-  (CORRECTNESS_FULL_LOCAL.json + CORRECTNESS_FULL_SF01.json, 319/319
-  each). Done = CORRECTNESS_r09.json 25/25 green (+25 already-green
-  fillers); cumulative then 319/319.
-- r10 (this round): r09 landed 50/50 and the cumulative ledger reached
-  319/319 — every oracle query has a driver hash row. The rotation
-  therefore switches to RE-VERIFY mode: the head leads with the one
-  round-10 addition (q_knn_ivf_classifier — the IVF-candidate kNN,
-  VERDICT r09 item 2), then the 11 names whose implementation or
-  oracle changed after their last green row (decision-stump div
-  guards, dedup-aware-split oracle anchor, the two sf1.0-sweep
-  divergence fixes q_winsorize/q_hierarchy_depth, and the round-10
-  perf work: label-prop layout flip, pagerank/kmeans
-  measured-and-annotated plans, rrf/text-stats staging consumers),
-  then fills to 50 with coverage-1 singletons (green exactly once,
-  earliest round first) so driver evidence accumulates where it is
-  thinnest.
-- r11 (this round): r10 landed 50/50 (cumulative 320/320 — zero pending
-  for a third round). Head = the seven round-11 additions (the k-means-
-  TRAINED IVF index and its trained-vs-untrained recall eval, VERDICT
-  r10 item 3; then the continuation-session batch: PQ-ADC search, the
-  two-stage ADC→exact re-rank, their exact-L2 recall eval, the
-  IVF-PQ end-to-end pipeline, and the pointer-doubling components
-  mode), then the names whose implementation changed this round
-  (_ROUND_CHANGED: the label-prop size-based layout dispatch, and the
-  IVF-tail consumers of the extensions/similarity.py _probe_topk
-  refactor — helper edits are invisible to impl_sha, so they re-earn
-  driver hashes explicitly), then coverage-1 singletons earliest-first
-  (the r03 extension tail, then the r04 SQL-surface names
-  alphabetically) to exactly 50.
-- r12 (this round): r11 landed 50/50 (cumulative 327/327 at that point).
-  Head = the five round-12 additions (the PQ production knobs — R
-  scaled to the corpus, the 8-bit codebook, both combined, their
-  4-method recall trade study — and the capped ~linear-output top-k
-  edit-distance join, registry_round12), then the four round-11 PQ
-  consumers of this round's helper edits (_pq_codes_arrow row-chunking,
-  memoized _pq_enc, parameterized builders; the new closure-aware
-  provenance.impl_sha flags these automatically in the LOCAL artifacts
-  — the driver head re-earns their hashes on current code), then
-  coverage-1 singletons continuing r11's alphabetical walk (r04 tail
-  from q_percentile, then the r06 head) to exactly 50. The round-12
-  continuation prepends its three retrieval-mining additions
-  (registry_round12b: q_hard_negative_mining, q_mmr_rerank,
-  q_bpe_merge_induction) — never-green names MUST take head slots per
-  tests/test_rotation.py — and the last three alphabetical fills
-  (q_dedup_semantic, q_doc_cross_entropy, q_dq_expectations) yield;
-  the re-verify walk resumes there in r13.
-- r13 (this round): r12 landed 50/50 (cumulative 335/335 — zero pending
-  for a fifth round). Head = the five round-13 additions
-  (registry_round13: hard-negative mining composed with the index both
-  ways — the cell-pruned IVF-PQ rejection and the production 8-bit
-  full-code ADC scan —, their band-recall trade study, BPE round-2
-  re-segmentation, MMR at production parameters), then the 8-name
-  closure blast radius of this round's edits (_ROUND_CHANGED: the
-  parameterized-MMR edit to registry_round12b flags its 3 queries; the
-  __init__ import of registry_round13 flags registry_round12's 5 via
-  the package-root closure — the set was verified to equal
-  full_correctness --update's stale computation exactly), then
-  coverage-1 singletons resuming r12's walk (the r06 group from
-  q_dedup_semantic, then the r07 group alphabetically) to exactly 50.
-  The round-13 continuation prepends its three additions (the 3-round
-  BPE learner q_bpe_learn3, the MRR/nDCG@5 rank-metrics eval
-  q_retrieval_rank_metrics, and the contrastive-batch assembly
-  q_contrastive_batches — never-green names MUST take head slots per
-  tests/test_rotation.py); the last three alphabetical fills
-  (q_audio_fingerprint_dedup, q_boilerplate_segments,
-  q_bpe_merge_pairs) yield, and the re-verify walk resumes there in
-  r14.
-- r14 (this round): r13 landed 50/50 (cumulative 349/349 — zero pending
-  for a sixth round; ledger regenerated with the r13 rows). Head = the
-  five round-14 additions (registry_round14: the incremental IVF-PQ
-  index upsert batch twin, its occupancy + staleness dashboards,
-  SPLADE-shape sparse retrieval, the OPQ rotation eval), then the
-  26-name closure blast radius of this round's edits (_ROUND_CHANGED:
-  the registry_round11 refactors — include_emb parameter, layout-
-  independent codebook fetch, static-codebook injection — flag R11's 7
-  queries and, via the import graph, R12's 5 and R13's 14; the
-  MATERIALIZED BPE-chain CTEs also move two oracle_shas, values
-  unchanged; the set was verified to equal full_correctness --update's
-  stale computation exactly), then coverage-1 singletons resuming r13's
-  walk at q_udtf_ngrams to exactly 50. The round-14 continuation
-  prepends its three additions (the retrain-churn metric
-  q_ivfpq_assignment_churn, the posting-stats dial sizer
-  q_splade_posting_stats, and the OPQ variance screen
-  q_opq_subspace_variance — never-green names MUST take head slots per
-  tests/test_rotation.py); the last three alphabetical fills
-  (q_embedding_norms_arrow, q_explode_outer, q_gini) yield, and the
-  re-verify walk resumes there in r15.
-- r15 (this round, optimization round 2): r14 landed 49/50 — the one
-  red row, q_ivfpq_index_upsert, errored in the driver's pandas
-  canonicalizer on its list-typed codes column; fixed this round by
-  emitting codes as a delimited string in BOTH the query and its
-  oracle, and it leads the head as the only never-green name. The rest
-  of the head is _ROUND_CHANGED: every query path this optimization
-  round's commits touched (the trained-quantizer memo family, the
-  profile-then-fix tier, the totals NULL-guard + BM25/PMI corpus-pass
-  cuts, the LSH dedup cuts, representative consumers of the
-  layout-capture coherence fix in extensions/dedup._cut_lineage, and
-  the similarity-kernel closure), re-earning driver hashes on current
-  code; then coverage-1 fills resuming the alphabetical walk at
-  q_embedding_norms_arrow as r14 noted (+ q_feature_hashing) to
-  exactly 50. Ledger regenerated with the 49 r14 greens.
 """
 
 from __future__ import annotations

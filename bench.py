@@ -79,25 +79,35 @@ HEADLINE = [
 ]
 
 
-def main() -> None:
-    smoke = "--smoke" in sys.argv
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_SF_DIR",
-        "/root/testdata/sf0.01" if smoke else "/root/testdata/sf0.1",
-    )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
+BENCH_CONF = {
+    # One scan-cache slice per partition (see bench_session): a second
+    # ≥4 MB open-cost file would overflow the 8 MB split budget.
+    "spark.sql.files.maxPartitionBytes": "8m",
+    "spark.sql.files.openCostInBytes": "4m",
+    # AQE's parallelism-first coalescer still floors partitions
+    # at minPartitionSize (1 MB default), which collapses the
+    # MB-scale post-shuffle data here to 1-2 partitions and
+    # serializes the window/aggregate stages behind them.  64 KB
+    # keeps the coalescer ON (the scale behavior) while letting
+    # it actually hit the default-parallelism target on
+    # fixture-sized shuffles: zscore 0.95 s → 0.62 s.  A cluster
+    # session keeps the 1 MB default — its shuffles are GB-scale
+    # and never floor-limited.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
+}
 
+
+def bench_session(app: str = "bench"):
+    """The bench's SparkSession on local[$SPARK_GRAFT_CPUS]."""
     # Bench sessions read the engine's own storage layout: the fixture
     # parquet is one row group per table (Spark's scan-split unit), which
     # pins every scan — and the CPU-dense work fused into it — to ONE
     # task. sources/scan_cache.py re-slices each table once (order and
     # values untouched) into ≤32 contiguous files, the layout an ingest
-    # job would have written; the split confs below make each slice its
-    # own partition (a second ≥4 MB open-cost file would overflow the
-    # 8 MB split budget). Correctness runs keep the original files.
+    # job would have written; BENCH_CONF's split sizes make each slice
+    # its own partition. Correctness runs keep the original files.
     os.environ.setdefault("SPARK_GRAFT_SCAN_CACHE", "1")
 
-    from crypto_streaming_lakehouse_spark.registry import REGISTRY
     from crypto_streaming_lakehouse_spark.session import get_spark
 
     # Shuffle width sized by BYTES, not core count: the fixture's
@@ -110,26 +120,48 @@ def main() -> None:
     # round 8): totals 42.4/44.8 s @32 → 36.4/35.3 s @12; graph family
     # −0.3…−0.7 s/query; only CPU-dense q_edit_distance_join regresses
     # (+0.37 s), a net accept under the ≥5 s criterion.
-    shuffle = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "12"))
-    spark = get_spark(
-        "bench",
-        cpus=cpus,
-        shuffle_partitions=shuffle,
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": "8m",
-            "spark.sql.files.openCostInBytes": "4m",
-            # AQE's parallelism-first coalescer still floors partitions
-            # at minPartitionSize (1 MB default), which collapses the
-            # MB-scale post-shuffle data here to 1-2 partitions and
-            # serializes the window/aggregate stages behind them.  64 KB
-            # keeps the coalescer ON (the scale behavior) while letting
-            # it actually hit the default-parallelism target on
-            # fixture-sized shuffles: zscore 0.95 s → 0.62 s.  A cluster
-            # session keeps the 1 MB default — its shuffles are GB-scale
-            # and never floor-limited.
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
-        },
+    return get_spark(
+        app,
+        cpus=os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)),
+        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "12")),
+        extra_conf=BENCH_CONF,
     )
+
+
+def run_query(spark, name: str, sf_dir: str) -> float:
+    """Seconds to run registry query ``name`` into the noop sink."""
+    from crypto_streaming_lakehouse_spark.registry import REGISTRY
+
+    t0 = time.perf_counter()
+    REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    return time.perf_counter() - t0
+
+
+def time_cold(spark, name: str, sf_dir: str, n: int) -> float:
+    """Isolated protocol: one warm run, then the minimum of ``n`` runs
+    that each start from cleared memos and so pay their own
+    materializations."""
+    from crypto_streaming_lakehouse_spark.extensions.dedup import memo_clear
+
+    run_query(spark, name, sf_dir)
+    best = float("inf")
+    for _ in range(n):
+        memo_clear()
+        best = min(best, run_query(spark, name, sf_dir))
+    return best
+
+
+def main() -> None:
+    smoke = "--smoke" in sys.argv
+    sf_dir = os.environ.get(
+        "SPARK_GRAFT_SF_DIR",
+        "/root/testdata/sf0.01" if smoke else "/root/testdata/sf0.1",
+    )
+    spark = bench_session()
+
+    from crypto_streaming_lakehouse_spark.registry import REGISTRY
 
     names = [n for n in HEADLINE if n in REGISTRY]
     if smoke:
@@ -143,13 +175,6 @@ def main() -> None:
     extra = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
     if extra:
         names = [n for n in extra.split(",") if n in REGISTRY]
-
-    def run(name: str) -> float:
-        t0 = time.perf_counter()
-        REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return time.perf_counter() - t0
 
     # Warmup pass: JIT, whole-stage codegen compilation, classloading, and
     # parquet footer caches are one-time driver costs, not per-query work —
@@ -165,14 +190,15 @@ def main() -> None:
     # graph/dedup query's number = plan time + a rebuild whose cost
     # proved epoch-sensitive across rounds (the r09-binary A/B,
     # bench_artifacts/r11/ab_hostdrift_graph.json). Cold-build costs
-    # remain measured and reported by scripts/time_one.py (memo_clear
-    # per run) and the paired-bench protocol; per-plan times verified
-    # unchanged against the isolated protocol when this landed.
+    # remain measured and reported by scripts/profile_bench.py --cold
+    # (time_cold: memo_clear per run) and the paired-bench protocol;
+    # per-plan times verified unchanged against the isolated protocol
+    # when this landed.
     if not smoke:
         for name in names:
-            run(name)
+            run_query(spark, name, sf_dir)
 
-    timings = {name: round(run(name), 3) for name in names}
+    timings = {name: round(run_query(spark, name, sf_dir), 3) for name in names}
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:

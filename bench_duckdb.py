@@ -23,17 +23,13 @@ import duckdb
 
 from bench import HEADLINE
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     threads = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
 
     from crypto_streaming_lakehouse_spark.registry import REGISTRY
+    from crypto_streaming_lakehouse_spark.sources.tables import TABLES
 
     con = duckdb.connect()
     con.sql("SET TimeZone='UTC'")

@@ -26,9 +26,25 @@ import sys
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 
 
-def run_bench(
-    extra_conf: str | None, extra_env: list[str] | None = None
-) -> dict[str, float]:
+def run_bench(script: str, env: dict[str, str] | None = None) -> dict[str, float]:
+    """Run a bench script in a fresh subprocess; return its ``queries``."""
+    proc = subprocess.run(
+        [sys.executable, str(ROOT / script)],
+        capture_output=True,
+        text=True,
+        check=True,
+        cwd=ROOT,
+        env=env,
+    )
+    # The bench prints ONE JSON line; logs may precede it.
+    for line in reversed(proc.stdout.strip().splitlines()):
+        line = line.strip()
+        if line.startswith("{"):
+            return json.loads(line)["queries"]
+    raise RuntimeError(f"no JSON line in {script} output:\n{proc.stdout[-2000:]}")
+
+
+def side_env(extra_conf: str | None, extra_env: list[str] | None) -> dict[str, str]:
     env = dict(os.environ)
     env.pop("SPARK_GRAFT_EXTRA_CONF", None)
     if extra_conf:
@@ -36,19 +52,7 @@ def run_bench(
     for kv in extra_env or []:
         k, _, v = kv.partition("=")
         env[k] = v
-    proc = subprocess.run(
-        [sys.executable, str(ROOT / "bench.py")],
-        capture_output=True,
-        text=True,
-        check=True,
-        cwd=ROOT,
-        env=env,
-    )
-    for line in reversed(proc.stdout.strip().splitlines()):
-        line = line.strip()
-        if line.startswith("{"):
-            return json.loads(line)["queries"]
-    raise RuntimeError(f"no JSON line in bench output:\n{proc.stdout[-2000:]}")
+    return env
 
 
 def main() -> None:
@@ -76,12 +80,11 @@ def main() -> None:
                 file=sys.stderr,
                 flush=True,
             )
-            runs[side].append(
-                run_bench(
-                    args.b_conf if side == "B" else None,
-                    args.b_env if side == "B" else None,
-                )
+            env = side_env(
+                args.b_conf if side == "B" else None,
+                args.b_env if side == "B" else None,
             )
+            runs[side].append(run_bench("bench.py", env))
 
     names = list(runs["A"][0])
     mins = {

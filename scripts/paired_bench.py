@@ -21,26 +21,9 @@ from __future__ import annotations
 import argparse
 import json
 import pathlib
-import subprocess
 import sys
 
-ROOT = pathlib.Path(__file__).resolve().parent.parent
-
-
-def run_bench(script: str) -> dict[str, float]:
-    proc = subprocess.run(
-        [sys.executable, str(ROOT / script)],
-        capture_output=True,
-        text=True,
-        check=True,
-        cwd=ROOT,
-    )
-    # The bench prints ONE JSON line; logs may precede it.
-    for line in reversed(proc.stdout.strip().splitlines()):
-        line = line.strip()
-        if line.startswith("{"):
-            return json.loads(line)["queries"]
-    raise RuntimeError(f"no JSON line in {script} output:\n{proc.stdout[-2000:]}")
+from ab_bench import ROOT, run_bench
 
 
 def main() -> None:

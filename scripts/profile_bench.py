@@ -2,13 +2,25 @@
 STAGE counts (statusTracker over a per-query job group), and the
 formatted plan — the guide-§1 measurement pass behind OPTIMIZATION_r14.md.
 
-Same session/protocol as bench.py (scan-cache layout, 8 MB splits,
-bytes-sized shuffle, warmup pass keeps memos warm). Writes one JSON line
-per query to --out and, with --plans DIR, each query's
-``explain("formatted")`` text to DIR/<name>.txt.
+Same session/protocol as bench.py (bench_session: scan-cache layout,
+8 MB splits, bytes-sized shuffle; a warm pass over every query, then one
+measured pass, so memos built while warming stay warm). The JSON at
+--out is rewritten after each query; a query that raises records ``err``
+and the run goes on. With --plans DIR, each query's
+``explain("formatted")`` text goes to DIR/<name>.txt.
 
-Usage: python scripts/profile_bench.py [--out FILE] [--plans DIR]
-       [--queries a,b,c]   (default: bench.py's HEADLINE list)
+Modes:
+  --queries a,b,c   the queries to profile (default: bench.py's HEADLINE;
+                    ``all`` = every registry query, sorted by name)
+  --cold            time with bench.time_cold(n=3) instead: one warm run,
+                    then min of 3 runs each after memo_clear(), so every
+                    timed run pays its own materializations; the job
+                    group then spans all four runs
+  --duckdb          add the DuckDB oracle's min-of-3 on the same parquet
+                    (``duckdb_s``) and the Spark/DuckDB ``ratio``
+
+Usage: python scripts/profile_bench.py [--queries a,b,c|all] [--cold]
+       [--duckdb] [--sf-dir DIR] [--out FILE] [--plans DIR]
 """
 
 from __future__ import annotations
@@ -23,7 +35,15 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_GRAFT_SCAN_CACHE", "1")
+
+
+def duckdb_seconds(con, sql: str) -> float:
+    best = float("inf")
+    for _ in range(3):
+        t0 = time.perf_counter()
+        con.execute(sql).fetchall()
+        best = min(best, time.perf_counter() - t0)
+    return best
 
 
 def main() -> None:
@@ -33,50 +53,39 @@ def main() -> None:
     ap.add_argument("--queries", default=None)
     ap.add_argument("--sf-dir", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    ap.add_argument("--cold", action="store_true")
+    ap.add_argument("--duckdb", action="store_true")
     args = ap.parse_args()
 
-    from bench import HEADLINE
+    from bench import HEADLINE, bench_session, run_query, time_cold
+
+    spark = bench_session("profile-bench")
 
     from crypto_streaming_lakehouse_spark.registry import REGISTRY
-    from crypto_streaming_lakehouse_spark.session import get_spark
 
-    names = (
-        [n for n in args.queries.split(",") if n in REGISTRY]
-        if args.queries
-        else [n for n in HEADLINE if n in REGISTRY]
-    )
-    shuffle = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "12"))
-    spark = get_spark(
-        "profile-bench",
-        cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"),
-        shuffle_partitions=shuffle,
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": "8m",
-            "spark.sql.files.openCostInBytes": "4m",
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
-        },
-    )
+    if args.queries == "all":
+        names = sorted(REGISTRY)
+    elif args.queries:
+        names = [n for n in args.queries.split(",") if n in REGISTRY]
+    else:
+        names = [n for n in HEADLINE if n in REGISTRY]
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     plans_dir = pathlib.Path(args.plans) if args.plans else None
     if plans_dir:
         plans_dir.mkdir(parents=True, exist_ok=True)
+    con = None
+    if args.duckdb:
+        from tests.oracle import duckdb_connect
 
-    def run(name: str) -> float:
-        t0 = time.perf_counter()
-        REGISTRY[name].fn(spark, args.sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return time.perf_counter() - t0
+        con = duckdb_connect(args.sf_dir)
 
-    # Warmup pass (bench protocol: memos built here stay warm).
-    for name in names:
-        run(name)
-
-    rows = []
-    for name in names:
+    def profile(name: str) -> dict:
         sc.setJobGroup(name, name)
-        dt = run(name)
+        if args.cold:
+            dt = time_cold(spark, name, args.sf_dir, 3)
+        else:
+            dt = run_query(spark, name, args.sf_dir)
         sc.setJobGroup(None, None)
         job_ids = tracker.getJobIdsForGroup(name)
         n_stages = 0
@@ -90,19 +99,51 @@ def main() -> None:
             "jobs": len(job_ids),
             "stages": n_stages,
         }
-        rows.append(row)
+        if con is not None:
+            sql = REGISTRY[name].sql
+            db = duckdb_seconds(con, sql) if sql is not None else None
+            row["duckdb_s"] = None if db is None else round(db, 3)
+            row["ratio"] = None if db is None else round(dt / db, 2)
         if plans_dir:
             df = REGISTRY[name].fn(spark, args.sf_dir)
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")
             (plans_dir / f"{name}.txt").write_text(buf.getvalue())
+        return row
 
-    rows.sort(key=lambda r: -r["sec"])
+    # Warmup pass (bench protocol: memos built here stay warm).
+    warm_err: dict[str, Exception] = {}
+    if not args.cold:
+        for name in names:
+            try:
+                run_query(spark, name, args.sf_dir)
+            except Exception as e:
+                warm_err[name] = e
+
+    rows = []
+    for name in names:
+        try:
+            if name in warm_err:
+                raise warm_err[name]
+            rows.append(profile(name))
+        except Exception as e:  # keep sweeping; record the failure
+            rows.append({"query": name, "err": f"{type(e).__name__}: {e}"[:200]})
+        with open(args.out, "w") as f:
+            json.dump({"sf_dir": args.sf_dir, "rows": rows}, f, indent=1)
+
+    rows.sort(key=lambda r: -r.get("sec", -1))
     with open(args.out, "w") as f:
         json.dump({"sf_dir": args.sf_dir, "rows": rows}, f, indent=1)
     for r in rows:
-        print(f"{r['sec']:7.3f}s  {r['jobs']:3d} jobs {r['stages']:3d} stages  {r['query']}")
+        if "err" in r:
+            print(f"    ERR  {r['query']}: {r['err']}")
+            continue
+        line = (f"{r['sec']:7.3f}s  {r['jobs']:3d} jobs {r['stages']:3d} stages"
+                f"  {r['query']}")
+        if r.get("ratio") is not None:
+            line += f"  duckdb={r['duckdb_s']:.3f}s ratio={r['ratio']:.2f}"
+        print(line)
     spark.stop()
 
 

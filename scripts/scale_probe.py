@@ -14,7 +14,6 @@ from __future__ import annotations
 import os
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -30,11 +29,6 @@ DEFAULT_QUERIES = [
     "q_retention_cohorts",
     "q_decontaminate",
     "q_local_supplier_volume",
-]
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
 ]
 
 
@@ -142,56 +136,37 @@ def amplify(spark, out_dir: str) -> None:
 
 
 def main() -> None:
-    from crypto_streaming_lakehouse_spark.registry import REGISTRY
-    from crypto_streaming_lakehouse_spark.session import get_spark
+    from bench import bench_session, time_cold
 
     names = sys.argv[1:] or DEFAULT_QUERIES
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    # Same scan layout + split sizing as bench.py: without it the BASE
-    # reads the driver's single-row-group files (scans pinned to one
-    # task) while the amplified fixture is Spark-written multi-file —
-    # inconsistent layouts skew the factor by up to 5× (measured:
-    # minhash "6.5×" under mixed layout vs 1.8× under uniform layout).
-    os.environ.setdefault("SPARK_GRAFT_SCAN_CACHE", "1")
-    spark = get_spark(
-        "scale-probe",
-        cpus=cpus,
-        shuffle_partitions=int(cpus),
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": "8m",
-            "spark.sql.files.openCostInBytes": "4m",
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
-        },
+    # Shuffle width = cpus, the sizing SCALE.md's rows were measured
+    # under. The bench session's scan layout + split sizing matters
+    # here: without it the BASE reads the driver's single-row-group
+    # files (scans pinned to one task) while the amplified fixture is
+    # Spark-written multi-file — inconsistent layouts skew the factor
+    # by up to 5× (measured: minhash "6.5×" under mixed layout vs 1.8×
+    # under uniform layout).
+    os.environ.setdefault(
+        "SPARK_GRAFT_SHUFFLE",
+        os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)),
     )
+    spark = bench_session("scale-probe")
+
+    from crypto_streaming_lakehouse_spark.registry import REGISTRY
 
     with tempfile.TemporaryDirectory(prefix="amplified_") as big:
         print(f"amplifying {BASE} x{AMPLIFY} -> {big}", file=sys.stderr)
         amplify(spark, big)
 
-        from crypto_streaming_lakehouse_spark.extensions.dedup import (
-            memo_clear,
-        )
-
-        def run(name: str, sf: str) -> float:
-            fn = REGISTRY[name].fn
-            fn(spark, sf).write.format("noop").mode("overwrite").save()
-            best = float("inf")
-            for _ in range(2):
-                # clear cross-query memos so every timed run pays its own
-                # materializations — the probe measures how ONE query
-                # scales, not how a warm cache performs
-                memo_clear()
-                t0 = time.perf_counter()
-                fn(spark, sf).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            return best
-
+        # time_cold clears cross-query memos before every timed run, so
+        # each pays its own materializations — the probe measures how ONE
+        # query scales, not how a warm cache performs.
         print(f"{'query':30s} {'base':>7s} {'10x':>7s} {'factor':>7s}")
         for n in names:
             if n not in REGISTRY:
                 continue
-            b = run(n, BASE)
-            a = run(n, big)
+            b = time_cold(spark, n, BASE, 2)
+            a = time_cold(spark, n, big, 2)
             print(f"{n:30s} {b:7.2f} {a:7.2f} {a / b:6.1f}x")
 
 

@@ -11,6 +11,8 @@ import os
 import subprocess
 import sys
 
+from .conftest import SF_DIR
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -35,3 +37,69 @@ def test_bench_smoke_runs_and_emits_json():
     assert rec["metric"] == "smoke_queries_total"
     assert rec["queries"], "smoke ran zero queries"
     assert all(v >= 0 for v in rec["queries"].values())
+
+
+def test_profiler_cold_duckdb_rows(tmp_path):
+    """The profiler's isolated mode: min-of-3 memo-cleared Spark runs plus
+    the DuckDB oracle's min-of-3 and their ratio, one row per query."""
+    out = tmp_path / "profile.json"
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "4"}
+    proc = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(REPO, "scripts", "profile_bench.py"),
+            "--queries", "q_ohlcv_bars,q_groupby_agg",
+            "--cold", "--duckdb",
+            "--sf-dir", SF_DIR,
+            "--out", str(out),
+        ],
+        capture_output=True,
+        text=True,
+        cwd=REPO,
+        env=env,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    rows = json.loads(out.read_text())["rows"]
+    assert sorted(r["query"] for r in rows) == ["q_groupby_agg", "q_ohlcv_bars"]
+    for r in rows:
+        assert {"sec", "jobs", "stages", "duckdb_s", "ratio"} <= r.keys(), r
+        assert r["sec"] > 0 and r["jobs"] > 0 and r["duckdb_s"] > 0
+
+
+def test_bench_import_is_side_effect_free():
+    """``from bench import HEADLINE`` (the benchmark's workload lists) must
+    neither pull in pyspark nor switch the scan-cache layout on."""
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_SCAN_CACHE"}
+    code = (
+        "import os, sys\n"
+        "import bench\n"
+        "assert 'pyspark' not in sys.modules\n"
+        "assert 'SPARK_GRAFT_SCAN_CACHE' not in os.environ\n"
+        "assert bench.HEADLINE\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        cwd=REPO,
+        env=env,
+        timeout=60,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+
+
+def test_bench_conf_is_defined_once():
+    """The bench session's split/coalescer conf lives in bench.BENCH_CONF
+    only; every script builds its session through bench.bench_session."""
+    files = [os.path.join(REPO, "bench.py"), os.path.join(REPO, "bench_duckdb.py")]
+    scripts = os.path.join(REPO, "scripts")
+    files += [
+        os.path.join(scripts, f) for f in sorted(os.listdir(scripts))
+        if f.endswith(".py")
+    ]
+    holders = [
+        os.path.relpath(f, REPO) for f in files
+        if "spark.sql.files.maxPartitionBytes" in open(f).read()
+    ]
+    assert holders == ["bench.py"], holders
