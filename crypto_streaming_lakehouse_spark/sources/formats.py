@@ -1,16 +1,9 @@
-"""Lakehouse table-format selection: Delta when available, parquet else.
+"""Streaming sink of the medallion layers: partitioned parquet directories.
 
-The medallion layers are append-only partitioned tables; Delta (or
-Iceberg) adds ACID commits, OPTIMIZE/compaction, and time travel on top of
-the same directory layout. Neither runtime ships in this container, so the
-format is detected at runtime: ``delta-spark`` importable → "delta",
-otherwise plain parquet directories (byte-compatible data files — moving
-to Delta later is a metadata operation, CONVERT TO DELTA, not a rewrite).
-
-Iceberg would slot in the same way (format "iceberg" + catalog session
-configs); it needs its runtime jar, so only Delta is probed for.
-
-For the time-travel/ACID-commit slice those formats provide, see
+Every reader of these sinks (the silver and gold jobs' ``readStream``, the
+analysis layer, the benchmark and the tests) reads parquet, so moving a
+layer to Delta or Iceberg means changing this writer and all of its readers
+together. For the time-travel/ACID-commit slice those formats provide, see
 ``sources/snapshots.py`` — a versioned-manifest layer over the same
 parquet files (atomic link(2) commits, snapshot-isolated reads, append
 auto-merge on conflict, rollback) that needs no external runtime.
@@ -19,31 +12,7 @@ auto-merge on conflict, rollback) that needs no external runtime.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def table_format() -> str:
-    """"delta" when the Delta Lake runtime is importable, else "parquet"."""
-    try:
-        import delta  # noqa: F401
-
-        return "delta"
-    except ImportError:
-        return "parquet"
-
-
-def write_table(
-    df: DataFrame,
-    path: str,
-    *,
-    mode: str = "append",
-    partition_by: list[str] | None = None,
-    fmt: str | None = None,
-) -> None:
-    """Batch write in the active table format."""
-    writer = df.write.format(fmt or table_format()).mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(path)
+from pyspark.sql.streaming import DataStreamWriter
 
 
 def stream_writer(
@@ -53,11 +22,11 @@ def stream_writer(
     checkpoint: str,
     partition_by: list[str] | None = None,
     trigger: dict | None = None,
-    fmt: str | None = None,
-):
-    """Configured (unstarted) streaming writer in the active table format."""
+) -> DataStreamWriter:
+    """Configured (unstarted) append-mode parquet stream writer;
+    ``trigger`` defaults to ``availableNow``."""
     writer = (
-        df.writeStream.format(fmt or table_format())
+        df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
         .option("compression", "snappy")

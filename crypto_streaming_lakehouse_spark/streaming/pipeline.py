@@ -17,20 +17,16 @@ equivalence tests run.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.bars import ohlcv_bars
 from ..schemas import BRONZE_SCHEMA, SILVER_SCHEMA
-from ..transforms import bronze_to_silver, dedup_trades
+from ..sources.formats import stream_writer
+from ..transforms import bronze_to_silver, dedup_trades, kafka_records_to_bronze
 
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-HDFS_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
 )
 #: Partition columns of the gold bars sink (silver_to_gold_bars.py:72).
 #: ``silver_stream_to_gold`` clusters its output by the same columns, so a
@@ -38,12 +34,12 @@ HDFS_PROVIDER = (
 GOLD_PARTITION_BY = ("bar_date", "symbol")
 
 
-def configure_state_store(spark: SparkSession, provider: str | None = None) -> str:
-    """Set the state-store backend for the stateful jobs started below.
+def configure_state_store(spark: SparkSession) -> None:
+    """Put the stateful jobs started below on RocksDB with changelog
+    checkpointing.
 
-    Default is **RocksDB with changelog checkpointing** — measured
-    strictly better than the on-heap HDFS-backed provider for the
-    watermarked-dedup pipeline at the 100k rows/s probe load (SCALE.md
+    Measured strictly better than the on-heap HDFS-backed provider for
+    the watermarked-dedup pipeline at the 100k rows/s probe load (SCALE.md
     round-10 table: 97.7k vs 85.7k rows/s sustained, ~106 vs ~350 B/row
     of dedup state, 20 steady silver batches vs 4 snapshot-stalled
     ones), and the only provider whose state is not bounded by executor
@@ -54,59 +50,17 @@ def configure_state_store(spark: SparkSession, provider: str | None = None) -> s
     watermark: plain RocksDB aborts the stream with a "mutation occurred
     during iteration" error on eviction (round-10 operational finding).
 
-    ``provider`` (or env ``SPARK_GRAFT_STATE_PROVIDER``): ``rocksdb``
-    (default), ``hdfs`` (the previous on-heap default — also the right
-    choice when RESTARTING a checkpoint written by it, since the two
-    providers' state files are not interchangeable), or ``session``
-    (leave whatever the session already configured untouched).
-
-    The providerClass is a session-level SQL conf read at query START,
-    so this mutates the session: streams started later in the same
-    session inherit it unless reconfigured.
+    The provider applies to new checkpoints only: Spark records the
+    providerClass in each checkpoint's offset log and restores it on
+    restart, so a checkpoint written under another provider resumes
+    under that provider (pinned by
+    test_checkpoint_keeps_its_state_provider). The conf is session-level,
+    so streams started later in the same session inherit it.
     """
-    provider = (
-        provider or os.environ.get("SPARK_GRAFT_STATE_PROVIDER") or "rocksdb"
-    ).lower()
-    if provider == "rocksdb":
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-        )
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled",
-            "true",
-        )
-    elif provider == "hdfs":
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", HDFS_PROVIDER
-        )
-    elif provider != "session":
-        raise ValueError(
-            f"unknown state-store provider {provider!r} "
-            "(expected rocksdb | hdfs | session)"
-        )
-    return provider
-
-
-def bronze_stream_to_silver(
-    bronze_stream: DataFrame,
-    *,
-    watermark: str = "2 minutes",
-    within_watermark: bool = False,
-) -> DataFrame:
-    """Silver plan over a streaming bronze source: parse + watermarked dedup.
-
-    Watermarked ``dropDuplicates`` keeps per-key state only until the
-    watermark passes — bounded state at any scale (T3).
-    ``within_watermark=True`` selects ``dropDuplicatesWithinWatermark``,
-    whose state is bounded by arrival gap instead of event time — the
-    preferred eviction policy when duplicates come from producer retries
-    (see transforms.dedup_trades for the semantic difference).
-    """
-    return dedup_trades(
-        bronze_to_silver(bronze_stream),
-        watermark=watermark,
-        within_watermark=within_watermark,
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+        "true",
     )
 
 
@@ -141,25 +95,6 @@ def silver_stream_to_gold(
     return bars.repartition(*GOLD_PARTITION_BY)
 
 
-def _start(
-    df: DataFrame,
-    *,
-    path: str,
-    checkpoint: str,
-    partition_by: list[str] | None,
-    trigger: dict,
-) -> StreamingQuery:
-    from ..sources.formats import stream_writer
-
-    return stream_writer(
-        df,
-        path=path,
-        checkpoint=checkpoint,
-        partition_by=partition_by,
-        trigger=trigger,
-    ).start()
-
-
 def start_records_to_bronze(
     records: DataFrame,
     *,
@@ -176,15 +111,12 @@ def start_records_to_bronze(
     parquet sink + checkpoint execute in a live microbatch loop; only the
     socket to a broker is substituted.
     """
-    from ..transforms import kafka_records_to_bronze
-
-    return _start(
+    return stream_writer(
         kafka_records_to_bronze(records),
         path=bronze_dir,
         checkpoint=checkpoint,
-        partition_by=None,
         trigger=trigger or {"processingTime": "5 seconds"},
-    )
+    ).start()
 
 
 def start_bronze_job(
@@ -231,22 +163,21 @@ def start_silver_job(
     silver_dir: str,
     checkpoint: str,
     watermark: str = "2 minutes",
-    within_watermark: bool = False,
     max_files_per_trigger: int | None = None,
     trigger: dict | None = None,
     backfill: bool = False,
-    state_provider: str | None = None,
 ) -> StreamingQuery:
-    """Bronze dir → silver dir as a file-source stream (jobs EP2).
+    """Bronze dir → silver dir as a file-source stream (jobs EP2): parse,
+    then ``dropDuplicates`` on the 5-col key behind an event-time
+    watermark, which keeps per-key state only until the watermark passes
+    — bounded state at any scale (T3).
 
     ``backfill=True`` reproduces the reference's hybrid mode: one batch
     read+dedup+write of pre-existing bronze, then the continuous stream
     (T6). ``max_files_per_trigger`` is the file-source backpressure knob
-    (T7). The watermarked-dedup state lives in RocksDB with changelog
-    checkpointing by default (see configure_state_store; pass
-    ``state_provider="hdfs"``/``"session"`` for legacy checkpoints).
+    (T7). The dedup state lives in RocksDB (configure_state_store).
     """
-    configure_state_store(spark, state_provider)
+    configure_state_store(spark)
     if backfill:
         batch = dedup_trades(
             bronze_to_silver(spark.read.schema(BRONZE_SCHEMA).parquet(bronze_dir))
@@ -257,16 +188,13 @@ def start_silver_job(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     bronze_stream = reader.parquet(bronze_dir)
-    silver = bronze_stream_to_silver(
-        bronze_stream, watermark=watermark, within_watermark=within_watermark
-    )
-    return _start(
-        silver,
+    return stream_writer(
+        dedup_trades(bronze_to_silver(bronze_stream), watermark=watermark),
         path=silver_dir,
         checkpoint=checkpoint,
         partition_by=["event_date"],
-        trigger=trigger or {"availableNow": True},
-    )
+        trigger=trigger,
+    ).start()
 
 
 def start_gold_job(
@@ -279,26 +207,24 @@ def start_gold_job(
     watermark: str = "2 minutes",
     max_files_per_trigger: int | None = None,
     trigger: dict | None = None,
-    state_provider: str | None = None,
 ) -> StreamingQuery:
     """Silver dir → gold bars dir; partitioned by ``GOLD_PARTITION_BY``
     for day+symbol pruned lookups (silver_to_gold_bars.py:72). Windowed-agg
-    state uses the same RocksDB+changelog default as the silver job.
+    state lives in RocksDB, as in the silver job.
     ``max_files_per_trigger`` caps the silver files each micro-batch reads,
     as in start_silver_job; ``None`` drains all of silver in one batch."""
-    configure_state_store(spark, state_provider)
+    configure_state_store(spark)
     reader = spark.readStream.schema(SILVER_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     silver_stream = reader.parquet(silver_dir)
-    gold = silver_stream_to_gold(silver_stream, bar=bar, watermark=watermark)
-    return _start(
-        gold,
+    return stream_writer(
+        silver_stream_to_gold(silver_stream, bar=bar, watermark=watermark),
         path=gold_dir,
         checkpoint=checkpoint,
         partition_by=list(GOLD_PARTITION_BY),
-        trigger=trigger or {"availableNow": True},
-    )
+        trigger=trigger,
+    ).start()
 
 
 def run_batch_pipeline(bronze: DataFrame, *, bar: str = "1 minute") -> DataFrame:
@@ -312,7 +238,6 @@ def buy_sell_matches(
     *,
     within: str = "1 minute",
     watermark: str = "2 minutes",
-    streaming: bool = True,
     how: str = "inner",
 ) -> DataFrame:
     """Stream–stream join: each buy matched to same-symbol sells within
@@ -329,8 +254,9 @@ def buy_sell_matches(
     trail the inner ones by the watermark delay (the late-data price of
     outer semantics on streams).
 
-    ``streaming=False`` builds the identical plan for a batch frame — the
-    oracle side of the stream≡batch test (watermarks are no-ops in batch).
+    Over a batch frame the same call is the oracle side of the
+    stream≡batch tests: Spark drops the watermarks when it analyzes a
+    batch plan.
     """
     from pyspark.sql import functions as F
 
@@ -338,15 +264,12 @@ def buy_sell_matches(
         F.col("symbol").alias("b_symbol"),
         F.col("event_time").alias("buy_time"),
         F.col("price").alias("buy_price"),
-    )
+    ).withWatermark("buy_time", watermark)
     sells = silver.where(F.col("side") == "sell").select(
         F.col("symbol").alias("s_symbol"),
         F.col("event_time").alias("sell_time"),
         F.col("price").alias("sell_price"),
-    )
-    if streaming:
-        buys = buys.withWatermark("buy_time", watermark)
-        sells = sells.withWatermark("sell_time", watermark)
+    ).withWatermark("sell_time", watermark)
     cond = (
         (F.col("b_symbol") == F.col("s_symbol"))
         & (F.col("sell_time") >= F.expr(f"buy_time - INTERVAL {within}"))

@@ -60,29 +60,13 @@ def bronze_to_silver(bronze: DataFrame) -> DataFrame:
     ).withColumn("event_date", F.to_date(F.col("event_time")))
 
 
-def dedup_trades(
-    silver: DataFrame,
-    *,
-    watermark: str | None = None,
-    within_watermark: bool = False,
-) -> DataFrame:
+def dedup_trades(silver: DataFrame, *, watermark: str | None = None) -> DataFrame:
     """Composite-key dedup (no natural trade id in the feed).
 
     Batch: plain ``dropDuplicates``. Streaming: pass ``watermark`` so the
     state store evicts expired keys (the scale-critical knob — unbounded
     dedup state is the 100 TB failure mode; see SURVEY.md §7).
-
-    ``within_watermark=True`` switches to ``dropDuplicatesWithinWatermark``
-    (Spark ≥3.5): state is keyed by the dedup key but evicted on the FIRST
-    seen event-time plus the delay, rather than kept until the watermark
-    passes the event-time itself. Semantic difference: a duplicate arriving
-    more than the delay after the first copy's event time survives; in
-    exchange, state for hot keys is strictly bounded by arrival time, which
-    is the right trade for at-least-once sources whose duplicates arrive
-    close together (e.g. Kafka producer retries).
     """
     if watermark is not None:
         silver = silver.withWatermark("event_time", watermark)
-        if within_watermark:
-            return silver.dropDuplicatesWithinWatermark(DEDUP_KEY)
     return silver.dropDuplicates(DEDUP_KEY)

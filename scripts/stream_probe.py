@@ -38,6 +38,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.errors import AnalysisException  # noqa: E402
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 
@@ -207,9 +208,9 @@ def run_probe(
         # emits a window only after the watermark passes its end).
         try:
             df = spark.read.parquet(path)
-            return df.count(), len(df.inputFiles())
-        except Exception:
+        except AnalysisException:  # sink dir missing or empty
             return 0, 0
+        return df.count(), len(df.inputFiles())
 
     for layer, path in (("gold", gold_dir), ("silver", silver_dir)):
         out[f"{layer}_rows_landed"], out[f"{layer}_files_landed"] = landed(path)
@@ -229,24 +230,11 @@ def main() -> None:
         "~rate x watermark keys, so raising it stresses the store "
         "without changing per-row work (VERDICT r11 item 6).",
     )
-    ap.add_argument(
-        "--state-provider",
-        choices=["hdfs", "rocksdb"],
-        default="rocksdb",
-        help="State store backend. RocksDB + changelog checkpointing is "
-        "the pipeline default since round 11 (measured better on every "
-        "axis — SCALE.md round-10 table); hdfs selects the previous "
-        "on-heap provider for comparison runs.",
-    )
     args = ap.parse_args()
 
     from crypto_streaming_lakehouse_spark.session import get_spark
 
     spark = get_spark("stream-probe")
-    # Route through the pipeline's own dispatch (start_*_job calls
-    # configure_state_store, which would otherwise override the session
-    # conf with the RocksDB default flipped in round 11).
-    os.environ["SPARK_GRAFT_STATE_PROVIDER"] = args.state_provider
     # ignore_cleanup_errors: state-store maintenance threads may still
     # be writing under the dir for a moment after stop(); a cleanup
     # race must not discard the already-collected measurements.

@@ -175,3 +175,61 @@ def test_capped_oracle_digest_is_not_truncated():
     out = proc.stdout[proc.stdout.index("{"):]
     rec = json.loads(out)["q_token_count"]
     assert rec["hash_match"], rec
+
+
+@pytest.mark.parametrize(
+    "earned_resolves,harness_diff,want_rc",
+    [(True, "", 0), (True, "tests/oracle.py", 1), (False, "", 1)],
+    ids=["harness-unchanged", "harness-changed", "earned-unresolvable"],
+)
+def test_zero_stale_update_restamps_only_with_unchanged_harness(
+    tmp_path, monkeypatch, capsys, earned_resolves, harness_diff, want_rc
+):
+    """ADVICE r15: a zero-stale ``--update`` executes nothing, so it may
+    move the artifact's git stamp to HEAD only when the harness
+    (full_correctness.py, tests/oracle.py), which no row's sha covers,
+    is unchanged since the commit the rows were earned on; that commit
+    is kept as ``rows_earned_at``. Otherwise it exits 1, names the
+    files and leaves the artifact as it was."""
+    import importlib.util
+    import sys
+
+    spec = importlib.util.spec_from_file_location(
+        "fc", _REPO / "scripts" / "full_correctness.py"
+    )
+    fc = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(fc)
+
+    artifact = tmp_path / "artifact.json"
+    artifact.write_text((_REPO / "CORRECTNESS_FULL_LOCAL.json").read_text())
+    prior = json.loads(artifact.read_text())
+    earned = prior["_meta"]["git_commit"]
+
+    def fake_git(*args: str) -> str:
+        if args[:2] == ("rev-parse", "--verify"):
+            return "f" * 40 if earned_resolves else ""
+        if args[0] == "diff":
+            assert args[2:] == (earned, "HEAD", "--", *fc._HARNESS)
+            return harness_diff
+        if args == ("rev-parse", "--short", "HEAD"):
+            return "headsha"
+        return ""  # clean `status --porcelain`
+
+    monkeypatch.setattr(fc, "_git", fake_git)
+    monkeypatch.setattr(fc, "_artifact_path", lambda _sf: str(artifact))
+    monkeypatch.setattr(sys, "argv", ["full_correctness.py", "sf", "--update"])
+    before = artifact.read_bytes()
+    assert fc.main() == want_rc
+    if want_rc:
+        assert artifact.read_bytes() == before
+        assert "tests/oracle.py" in capsys.readouterr().err
+        return
+    after = json.loads(artifact.read_text())
+    assert after["_meta"]["git_commit"] == "headsha"
+    assert after["_meta"]["rows_earned_at"] == earned
+    assert {k: v for k, v in after.items() if k != "_meta"} == {
+        k: v for k, v in prior.items() if k != "_meta"
+    }
+    # A second re-stamp keeps the commit the rows were earned on.
+    assert fc.main() == 0
+    assert json.loads(artifact.read_text())["_meta"]["rows_earned_at"] == earned

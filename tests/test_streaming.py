@@ -23,6 +23,7 @@ from crypto_streaming_lakehouse_spark.sources.formats import stream_writer
 from crypto_streaming_lakehouse_spark.sources.tables import events_as_trades
 from crypto_streaming_lakehouse_spark.streaming.pipeline import (
     GOLD_PARTITION_BY,
+    ROCKSDB_PROVIDER,
     configure_state_store,
     run_batch_pipeline,
     start_gold_job,
@@ -89,20 +90,11 @@ _GOLD_COLS = ["symbol", "bar_start", "bar_end", "open", "high", "low",
               "close", "volume", "vwap", "trades"]
 
 
-def test_state_store_default_is_rocksdb_with_changelog(
-    spark, bronze_dir, tmp_path, monkeypatch
-):
-    """VERDICT r10 item 2: the watermarked-dedup pipeline defaults to the
+def test_state_store_default_is_rocksdb_with_changelog(spark, bronze_dir, tmp_path):
+    """VERDICT r10 item 2: the watermarked-dedup pipeline runs on the
     RocksDB provider WITH changelog checkpointing (measured strictly
     better — SCALE.md round-10 table; changelog is required for
-    watermark eviction), with hdfs/session selectable as fallbacks."""
-    from crypto_streaming_lakehouse_spark.streaming.pipeline import (
-        HDFS_PROVIDER,
-        ROCKSDB_PROVIDER,
-        configure_state_store,
-    )
-
-    monkeypatch.delenv("SPARK_GRAFT_STATE_PROVIDER", raising=False)
+    watermark eviction)."""
     _, bronze = bronze_dir
     q = start_silver_job(
         spark,
@@ -123,27 +115,6 @@ def test_state_store_default_is_rocksdb_with_changelog(
     # The stream actually ran and deduped under the RocksDB provider.
     out = spark.read.parquet(str(tmp_path / "silver_rdb"))
     assert out.count() == out.select(DEDUP_KEY).distinct().count() > 0
-
-    # Fallbacks: explicit arg and env both reach the session conf.
-    assert configure_state_store(spark, "hdfs") == "hdfs"
-    assert (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-        == HDFS_PROVIDER
-    )
-    monkeypatch.setenv("SPARK_GRAFT_STATE_PROVIDER", "rocksdb")
-    assert configure_state_store(spark, None) == "rocksdb"
-    assert (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-        == ROCKSDB_PROVIDER
-    )
-    # "session" leaves the existing conf untouched.
-    assert configure_state_store(spark, "session") == "session"
-    assert (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-        == ROCKSDB_PROVIDER
-    )
-    with pytest.raises(ValueError):
-        configure_state_store(spark, "bogus")
 
 
 def test_silver_stream_matches_batch(spark, bronze_dir):
@@ -561,30 +532,6 @@ def test_bronze_job_runs_as_live_stream(spark, tmp_path):
     assert parsed.count() == bronze.count()
 
 
-def test_dedup_within_watermark_matches_batch(spark, bronze_dir, tmp_path):
-    """T3 scale path: dropDuplicatesWithinWatermark evicts state on arrival
-    gap rather than event time. The fixture's duplicates are exact copies
-    (identical event_time), so its output must equal the batch dedup —
-    the semantic divergence only appears for duplicates arriving more than
-    the delay apart."""
-    _, bronze = bronze_dir
-    silver_dir = str(tmp_path / "silver_ww")
-    q = start_silver_job(
-        spark,
-        bronze_dir=bronze,
-        silver_dir=silver_dir,
-        checkpoint=str(tmp_path / "ckpt_ww"),
-        within_watermark=True,
-        max_files_per_trigger=2,
-    )
-    q.awaitTermination(120)
-
-    streamed = spark.read.parquet(silver_dir)
-    batch = dedup_trades(bronze_to_silver(_read_bronze(spark, bronze)))
-    cols = [*DEDUP_KEY, "exchange", "order_type", "event_date"]
-    assert _rowset(streamed, cols) == _rowset(batch, cols)
-
-
 def test_stream_stream_join_matches_batch(spark, bronze_dir, tmp_path):
     """Stream-stream inner join with a time-range condition (finite state)
     equals the identical batch join over the same silver data."""
@@ -598,7 +545,7 @@ def test_stream_stream_join_matches_batch(spark, bronze_dir, tmp_path):
     out_dir = str(tmp_path / "matches")
     stream = spark.readStream.schema(SILVER_SCHEMA).parquet(silver_dir)
     q = (
-        buy_sell_matches(stream, streaming=True)
+        buy_sell_matches(stream)
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", str(tmp_path / "ckpt_ss"))
@@ -609,7 +556,7 @@ def test_stream_stream_join_matches_batch(spark, bronze_dir, tmp_path):
     q.awaitTermination(120)
 
     streamed = spark.read.parquet(out_dir)
-    batch = buy_sell_matches(spark.read.parquet(silver_dir), streaming=False)
+    batch = buy_sell_matches(spark.read.parquet(silver_dir))
     cols = ["symbol", "buy_time", "sell_time", "buy_price", "sell_price"]
     assert _rowset(streamed, cols) == _rowset(batch, cols)
     assert streamed.count() > 0
@@ -741,24 +688,6 @@ def test_stateful_ewma_matches_sequential_fold(spark, tmp_path):
     )
     assert len(merged) == n
     assert (abs(merged["ewma_s"] - merged["ewma_b"]) < 1e-9).all()
-
-
-def test_table_format_fallback_roundtrip(spark, tmp_path):
-    """Delta is probed at runtime and absent here → parquet fallback; the
-    data files are byte-compatible so a later move to Delta is a metadata
-    CONVERT, not a rewrite."""
-    from crypto_streaming_lakehouse_spark.sources.formats import (
-        table_format,
-        write_table,
-    )
-
-    assert table_format() in ("delta", "parquet")
-    t = events_as_trades(spark, SF_DIR).select("symbol", "price").limit(100)
-    dest = str(tmp_path / "tbl")
-    write_table(t, dest, mode="overwrite", partition_by=["symbol"])
-    back = spark.read.format(table_format()).load(dest)
-    assert back.count() == 100
-    assert set(back.columns) == {"symbol", "price"}
 
 
 def test_update_mode_windowed_agg_final_state(spark, bronze_dir, tmp_path):
@@ -898,7 +827,7 @@ def test_stream_stream_left_outer_join(spark, bronze_dir, tmp_path):
     out_dir = str(tmp_path / "matches_lo")
     stream = spark.readStream.schema(SILVER_SCHEMA).parquet(silver_dir)
     q = (
-        buy_sell_matches(stream, streaming=True, how="leftOuter")
+        buy_sell_matches(stream, how="leftOuter")
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", str(tmp_path / "ckpt_lo"))
@@ -910,15 +839,13 @@ def test_stream_stream_left_outer_join(spark, bronze_dir, tmp_path):
 
     streamed = spark.read.parquet(out_dir)
     silver_batch = spark.read.parquet(silver_dir)
-    inner = buy_sell_matches(silver_batch, streaming=False)
+    inner = buy_sell_matches(silver_batch)
     cols = ["symbol", "buy_time", "sell_time", "buy_price", "sell_price"]
 
     matched = streamed.where(F.col("sell_time").isNotNull())
     assert _rowset(matched, cols) == _rowset(inner, cols)
 
-    outer_batch = buy_sell_matches(
-        silver_batch, streaming=False, how="leftOuter"
-    )
+    outer_batch = buy_sell_matches(silver_batch, how="leftOuter")
     unmatched_batch = outer_batch.where(F.col("sell_time").isNull())
     unmatched_stream = streamed.where(F.col("sell_time").isNull())
     assert set(_rowset(unmatched_stream, cols)) <= set(
@@ -981,6 +908,92 @@ def test_checkpoint_restart_no_dups_no_loss(spark, bronze_dir, tmp_path):
     cols = [*DEDUP_KEY, "exchange", "order_type", "event_date"]
     assert _rowset(streamed, cols) == _rowset(batch, cols)
     assert partial <= streamed.count()
+
+
+def test_checkpoint_keeps_its_state_provider(spark, bronze_dir, tmp_path):
+    """A checkpoint written under the on-heap HDFS-backed provider resumes
+    through start_silver_job, although the job sets RocksDB on the
+    session: Spark records the providerClass in the checkpoint's offset
+    log and restores it on restart, so an old checkpoint needs no
+    provider switch. The resumed batch logs the HDFS provider again,
+    reports no RocksDB metrics, and silver equals the batch dedup.
+
+    Bronze arrives in two halves (one micro-batch each); the 40-day
+    watermark keeps the fixture's 30 days of disorder from being dropped
+    as late (see test_checkpoint_restart_no_dups_no_loss)."""
+    import json
+    import os
+    import shutil
+
+    provider_key = "spark.sql.streaming.stateStore.providerClass"
+    hdfs = "HDFSBackedStateStoreProvider"
+    _, bronze = bronze_dir
+    files = sorted(f for f in os.listdir(bronze) if f.endswith(".parquet"))
+    assert len(files) >= 2
+    half = len(files) // 2
+    src = tmp_path / "bronze"
+    src.mkdir()
+    silver_dir = str(tmp_path / "silver")
+    ckpt = tmp_path / "ckpt"
+
+    def logged_provider(batch_id: int) -> str:
+        lines = (ckpt / "offsets" / str(batch_id)).read_text().splitlines()
+        return json.loads(lines[1])["conf"][provider_key]
+
+    saved = {
+        k: spark.conf.get(k, None)
+        for k in (
+            provider_key,
+            "spark.sql.streaming.stateStore.rocksdb."
+            "changelogCheckpointing.enabled",
+        )
+    }
+    try:
+        for f in files[:half]:
+            shutil.copy(os.path.join(bronze, f), src / f)
+        spark.conf.set(
+            provider_key,
+            f"org.apache.spark.sql.execution.streaming.state.{hdfs}",
+        )
+        bronze_stream = spark.readStream.schema(BRONZE_SCHEMA).parquet(str(src))
+        q1 = stream_writer(
+            dedup_trades(bronze_to_silver(bronze_stream), watermark="40 days"),
+            path=silver_dir,
+            checkpoint=str(ckpt),
+            partition_by=["event_date"],
+            trigger={"once": True},
+        ).start()
+        assert q1.awaitTermination(120)
+        assert logged_provider(0).endswith(hdfs)
+
+        for f in files[half:]:
+            shutil.copy(os.path.join(bronze, f), src / f)
+        q2 = start_silver_job(
+            spark,
+            bronze_dir=str(src),
+            silver_dir=silver_dir,
+            checkpoint=str(ckpt),
+            watermark="40 days",
+        )
+        assert spark.conf.get(provider_key) == ROCKSDB_PROVIDER
+        assert q2.awaitTermination(120)
+        assert q2.exception() is None
+        progress = [p for p in q2.recentProgress if p.numInputRows > 0]
+        assert [p.batchId for p in progress] == [1]
+        assert logged_provider(1).endswith(hdfs)
+        metrics = progress[0].stateOperators[0].customMetrics
+        assert metrics and not any(k.startswith("rocksdb") for k in metrics)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+    streamed = spark.read.parquet(silver_dir)
+    batch = dedup_trades(bronze_to_silver(_read_bronze(spark, bronze)))
+    cols = [*DEDUP_KEY, "exchange", "order_type", "event_date"]
+    assert _rowset(streamed, cols) == _rowset(batch, cols)
 
 
 def test_query_listener_and_state_metrics(spark, bronze_dir, tmp_path):
@@ -1131,7 +1144,7 @@ def test_stream_stream_full_outer_join(spark, bronze_dir, tmp_path):
     out_dir = str(tmp_path / "matches_fo")
     stream = spark.readStream.schema(SILVER_SCHEMA).parquet(silver_dir)
     q = (
-        buy_sell_matches(stream, streaming=True, how="fullOuter")
+        buy_sell_matches(stream, how="fullOuter")
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", str(tmp_path / "ckpt_fo"))
@@ -1143,7 +1156,7 @@ def test_stream_stream_full_outer_join(spark, bronze_dir, tmp_path):
 
     streamed = spark.read.parquet(out_dir)
     silver_batch = spark.read.parquet(silver_dir)
-    inner = buy_sell_matches(silver_batch, streaming=False)
+    inner = buy_sell_matches(silver_batch)
     cols = ["symbol", "buy_time", "sell_time", "buy_price", "sell_price"]
 
     matched = streamed.where(
@@ -1151,9 +1164,7 @@ def test_stream_stream_full_outer_join(spark, bronze_dir, tmp_path):
     )
     assert _rowset(matched, cols) == _rowset(inner, cols)
 
-    full_batch = buy_sell_matches(
-        silver_batch, streaming=False, how="fullOuter"
-    )
+    full_batch = buy_sell_matches(silver_batch, how="fullOuter")
     for null_side in ("sell_time", "buy_time"):
         stream_side = streamed.where(F.col(null_side).isNull())
         batch_side = full_batch.where(F.col(null_side).isNull())
