@@ -11,10 +11,6 @@ from pyspark.sql import functions as F
 
 from crypto_streaming_lakehouse_spark.plans.audit import audit
 from crypto_streaming_lakehouse_spark.sources.tables import load_table
-from crypto_streaming_lakehouse_spark.sources.bucketing import (
-    read_bucketed,
-    write_bucketed,
-)
 
 from .conftest import SF_DIR
 
@@ -43,10 +39,17 @@ def bucketed_tables(spark, tmp_path_factory):
     orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    write_bucketed(li, "li_b", key="l_orderkey", buckets=8, path=str(base / "li_b"))
-    write_bucketed(
-        orders, "ord_b", key="o_orderkey", buckets=8, path=str(base / "ord_b")
-    )
+    for df, name, key in [
+        (li, "li_b", "l_orderkey"),
+        (orders, "ord_b", "o_orderkey"),
+    ]:
+        (
+            df.write.mode("overwrite")
+            .bucketBy(8, key)
+            .sortBy(key)
+            .option("path", str(base / name))
+            .saveAsTable(name)
+        )
     yield li, orders
     spark.sql("DROP TABLE IF EXISTS li_b")
     spark.sql("DROP TABLE IF EXISTS ord_b")
@@ -55,8 +58,8 @@ def bucketed_tables(spark, tmp_path_factory):
 def test_bucketed_join_is_shuffle_free(spark, bucketed_tables):
     li, orders = bucketed_tables
     with _conf(spark, **{"spark.sql.autoBroadcastJoinThreshold": "-1"}):
-        joined = read_bucketed(spark, "li_b").join(
-            read_bucketed(spark, "ord_b"),
+        joined = spark.table("li_b").join(
+            spark.table("ord_b"),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
         a = audit(joined)
@@ -74,7 +77,7 @@ def test_bucketed_join_is_shuffle_free(spark, bucketed_tables):
 def test_bucketed_agg_is_shuffle_free(spark, bucketed_tables):
     li, _ = bucketed_tables
     agg = (
-        read_bucketed(spark, "li_b")
+        spark.table("li_b")
         .groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("qty"))
     )
@@ -95,7 +98,7 @@ def test_bucket_pruning_on_key_equality(spark, bucketed_tables):
         spark,
         **{"spark.sql.sources.bucketing.autoBucketedScan.enabled": "false"},
     ):
-        q = read_bucketed(spark, "li_b").where(F.col("l_orderkey") == 1)
+        q = spark.table("li_b").where(F.col("l_orderkey") == 1)
         plan = audit(q).plan
         assert "SelectedBucketsCount: 1 out of 8" in plan
 
@@ -142,36 +145,3 @@ def test_parquet_merge_schema_evolution(spark, tmp_path):
     n = ev.count()
     assert merged.count() == 2 * n
     assert merged.where(F.col("event_type").isNull()).count() == n
-
-
-def test_compaction_rewrites_small_files(spark, tmp_path):
-    """Small-file compaction: a 64-file directory compacts to the
-    byte-sized target count, preserves the exact rowset, and with a
-    clustering key produces range-disjoint files (tight min/max for
-    file skipping)."""
-    from pyspark.sql import functions as F
-
-    from crypto_streaming_lakehouse_spark.sources.maintenance import (
-        compact_parquet,
-    )
-    from crypto_streaming_lakehouse_spark.sources.tables import load_table
-
-    src_dir = str(tmp_path / "frag")
-    dst_dir = str(tmp_path / "compacted")
-    ev = load_table(spark, SF_DIR, "events").select(
-        "event_id", "event_type", "value"
-    )
-    ev.repartition(64).write.parquet(src_dir)
-
-    stats = compact_parquet(
-        spark, src_dir, dst_dir, target_mb=128, sort_by=["event_id"]
-    )
-    assert stats["files_before"] == 64
-    assert stats["files_after"] == stats["target_files"] < 64
-
-    back = spark.read.parquet(dst_dir)
-    assert back.count() == ev.count()
-    assert (
-        back.agg(F.sum("event_id")).collect()[0][0]
-        == ev.agg(F.sum("event_id")).collect()[0][0]
-    )

@@ -562,134 +562,6 @@ def test_stream_stream_join_matches_batch(spark, bronze_dir, tmp_path):
     assert streamed.count() > 0
 
 
-def test_transform_with_state_running_totals(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4 StatefulProcessor API): the
-    per-symbol running totals after the stream drains must equal the
-    batch groupBy over the same input. The TWS Python worker protocol
-    needs the protobuf runtime — absent here, the test skips and
-    applyInPandasWithState (ewma test below) remains the exercised
-    stateful surface."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from crypto_streaming_lakehouse_spark.sources.tables import (
-        events_as_trades,
-    )
-    from crypto_streaming_lakehouse_spark.streaming.stateful import (
-        running_totals_tws,
-    )
-
-    t = events_as_trades(spark, SF_DIR).select("symbol", "price")
-    src = str(tmp_path / "src")
-    t.coalesce(2).write.parquet(src)
-
-    stream = (
-        spark.readStream.schema("symbol string, price double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out_dir = str(tmp_path / "totals")
-    q = (
-        running_totals_tws(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    # Update-mode emits one row per key per microbatch; the LAST row per
-    # key is the final state.
-    import pandas as pd
-
-    emitted = spark.read.parquet(out_dir).toPandas()
-    final = (
-        emitted.sort_values("n").groupby("symbol").tail(1).set_index("symbol")
-    )
-    want = {
-        r.symbol: (r.n, round(r.total, 6), r.vmax)
-        for r in t.groupBy("symbol")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("price").alias("total"),
-            F.max("price").alias("vmax"),
-        )
-        .collect()
-    }
-    got = {
-        sym: (int(row.n), round(float(row.total), 6), float(row.vmax))
-        for sym, row in final.iterrows()
-    }
-    assert got == want
-
-
-def test_stateful_ewma_matches_sequential_fold(spark, tmp_path):
-    """applyInPandasWithState custom operator: streaming per-symbol EWMA
-    over time-ordered micro-batches equals the sequential pandas fold."""
-    import pandas as pd
-
-    from crypto_streaming_lakehouse_spark.sources.tables import (
-        events_as_trades,
-    )
-    from crypto_streaming_lakehouse_spark.streaming.stateful import (
-        ewma_trades,
-    )
-
-    t = events_as_trades(spark, SF_DIR).select("symbol", "event_time", "price")
-    src = str(tmp_path / "src")
-    # three time-ordered chunks, written sequentially → the file source
-    # replays them as ordered micro-batches
-    pdf = t.toPandas().sort_values("event_time").reset_index(drop=True)
-    n = len(pdf)
-    bounds = [0, n // 3, 2 * n // 3, n]
-    for i in range(3):
-        spark.createDataFrame(pdf.iloc[bounds[i]:bounds[i + 1]]).coalesce(
-            1
-        ).write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema(
-        "symbol string, event_time timestamp, price double"
-    ).option("maxFilesPerTrigger", 1).parquet(src)
-    out_dir = str(tmp_path / "ewma")
-    q = (
-        ewma_trades(stream, alpha=0.2)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt_ewma"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = (
-        spark.read.parquet(out_dir)
-        .toPandas()
-        .sort_values(["symbol", "event_time"])
-        .reset_index(drop=True)
-    )
-    assert len(got) == n
-
-    # oracle: plain pandas recursive fold per symbol in event-time order
-    def fold(g):
-        prev = None
-        out = []
-        for p in g["price"]:
-            prev = p if prev is None else 0.2 * p + 0.8 * prev
-            out.append(prev)
-        return pd.Series(out, index=g.index)
-
-    exp = pdf.sort_values(["symbol", "event_time"]).reset_index(drop=True)
-    exp["ewma"] = exp.groupby("symbol", group_keys=False)[
-        ["symbol", "event_time", "price"]
-    ].apply(fold)
-    merged = got.merge(
-        exp, on=["symbol", "event_time"], suffixes=("_s", "_b")
-    )
-    assert len(merged) == n
-    assert (abs(merged["ewma_s"] - merged["ewma_b"]) < 1e-9).all()
-
-
 def test_update_mode_windowed_agg_final_state(spark, bronze_dir, tmp_path):
     """Update output mode: the windowed aggregate emits refreshed rows per
     microbatch instead of waiting for watermark closure. The LAST update
