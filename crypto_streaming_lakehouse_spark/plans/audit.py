@@ -16,6 +16,10 @@ properties that matter at scale:
 
 The audit reads Spark's explain output (a public, stable surface) rather
 than private plan objects, so it works on any DataFrame from any session.
+One reader goes further: ``broadcast_nlj_rows`` runs the query and walks
+the executed (AQE final) plan for the row counts each nested-loop join
+actually broadcast — the seed of per-stage figures read from the
+executed plan rather than the explained one.
 """
 
 from __future__ import annotations
@@ -114,3 +118,45 @@ def audit(df: DataFrame) -> PlanAudit:
         for m in _SCAN_RE.finditer(plan)
     ]
     return PlanAudit(plan=plan, scans=scans)
+
+
+def _exec_children(node) -> list:
+    """Children of an executed-plan node, through AQE's leaf wrappers."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if name.endswith("QueryStageExec"):
+        return [node.plan()]
+    if name == "ReusedExchangeExec":
+        return [node.child()]
+    return [
+        seq.apply(i)
+        for seq in (node.children(), node.subqueries())
+        for i in range(seq.size())
+    ]
+
+
+def _broadcast_rows(node) -> int:
+    """``numOutputRows`` of the BroadcastExchange at (or wrapped by) node."""
+    while node.getClass().getSimpleName() != "BroadcastExchangeExec":
+        (node,) = _exec_children(node)
+    return int(node.metrics().apply("numOutputRows").value())
+
+
+def broadcast_nlj_rows(df: DataFrame) -> list[int | None]:
+    """Run ``df`` and return, for each nested-loop join in its executed
+    plan, the rows its build side broadcast; a CartesianProduct (no
+    broadcast, both sides unbounded) reads ``None``."""
+    df.collect()
+    out: list[int | None] = []
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "BroadcastNestedLoopJoinExec":
+            build_left = node.buildSide().toString() == "BuildLeft"
+            out.append(_broadcast_rows(node.left() if build_left else node.right()))
+        elif name == "CartesianProductExec":
+            out.append(None)
+        stack.extend(_exec_children(node))
+    return out

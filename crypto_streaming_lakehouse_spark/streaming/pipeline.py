@@ -65,7 +65,7 @@ def configure_state_store(spark: SparkSession) -> None:
 
 
 def silver_stream_to_gold(
-    silver_stream: DataFrame, *, bar: str = "1 minute", watermark: str = "2 minutes"
+    silver_stream: DataFrame, *, watermark: str = "2 minutes"
 ) -> DataFrame:
     """Gold plan over a streaming silver source: watermarked windowed OHLCV.
 
@@ -91,7 +91,7 @@ def silver_stream_to_gold(
     larger silver files would change how a file-capped gold stream
     batches its input.
     """
-    bars = ohlcv_bars(silver_stream.withWatermark("event_time", watermark), bar=bar)
+    bars = ohlcv_bars(silver_stream.withWatermark("event_time", watermark))
     return bars.repartition(*GOLD_PARTITION_BY)
 
 
@@ -203,7 +203,6 @@ def start_gold_job(
     silver_dir: str,
     gold_dir: str,
     checkpoint: str,
-    bar: str = "1 minute",
     watermark: str = "2 minutes",
     max_files_per_trigger: int | None = None,
     trigger: dict | None = None,
@@ -219,7 +218,7 @@ def start_gold_job(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     silver_stream = reader.parquet(silver_dir)
     return stream_writer(
-        silver_stream_to_gold(silver_stream, bar=bar, watermark=watermark),
+        silver_stream_to_gold(silver_stream, watermark=watermark),
         path=gold_dir,
         checkpoint=checkpoint,
         partition_by=list(GOLD_PARTITION_BY),
@@ -227,10 +226,10 @@ def start_gold_job(
     ).start()
 
 
-def run_batch_pipeline(bronze: DataFrame, *, bar: str = "1 minute") -> DataFrame:
+def run_batch_pipeline(bronze: DataFrame) -> DataFrame:
     """Batch equivalent of the full bronze→gold pipeline (oracle side of the
     stream≡batch tests)."""
-    return ohlcv_bars(dedup_trades(bronze_to_silver(bronze)), bar=bar)
+    return ohlcv_bars(dedup_trades(bronze_to_silver(bronze)))
 
 
 def buy_sell_matches(

@@ -124,7 +124,6 @@ def run_probe(
         silver_dir=silver_dir,
         gold_dir=gold_dir,
         checkpoint=os.path.join(base_dir, "ckpt_gold"),
-        bar="1 minute",
         watermark=f"{watermark_s} seconds",
         trigger=trig,
     )

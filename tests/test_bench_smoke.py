@@ -6,10 +6,14 @@ a registry typo, or a plan-time failure in ANY family fails CI."""
 
 from __future__ import annotations
 
+import ast
+import importlib
 import json
 import os
+import pathlib
 import subprocess
 import sys
+import types
 
 from .conftest import SF_DIR
 
@@ -103,3 +107,65 @@ def test_bench_conf_is_defined_once():
         if "spark.sql.files.maxPartitionBytes" in open(f).read()
     ]
     assert holders == ["bench.py"], holders
+
+
+PKG = "crypto_streaming_lakehouse_spark"
+_MISSING = object()
+
+
+def _lookup(module: str, name: str):
+    try:
+        return importlib.import_module(f"{module}.{name}")
+    except ModuleNotFoundError:
+        return getattr(importlib.import_module(module), name, _MISSING)
+
+
+def test_perfbench_package_names_resolve():
+    """perfbench/ reaches into the package, bench.py and tests.oracle by
+    name, and no other test imports it: a rename would first break the
+    benchmark run. Its files are parsed, not imported (probes.install
+    rebinds package functions globally), and every name they use there
+    must resolve: ``from`` imports, attributes of imported modules
+    (``P.start_gold_job``) and the targets ``probes.install`` wraps."""
+    refs: set[tuple[str, str]] = set()
+    for path in sorted(pathlib.Path(REPO, "perfbench").glob("*.py")):
+        tree = ast.parse(path.read_text())
+        modules = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (
+                node.module in ("bench", "tests.oracle")
+                or node.module.startswith(PKG)
+            ):
+                for a in node.names:
+                    refs.add((node.module, a.name))
+                    obj = _lookup(node.module, a.name)
+                    if isinstance(obj, types.ModuleType):
+                        modules[a.asname or a.name] = obj.__name__
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and node.value.id in modules
+            ):
+                refs.add((modules[node.value.id], node.attr))
+        if path.name == "probes.py":
+            install = next(
+                n for n in tree.body
+                if isinstance(n, ast.FunctionDef) and n.name == "install"
+            )
+            for stmt in install.body:
+                looped = (
+                    [e.value for e in stmt.iter.elts]
+                    if isinstance(stmt, ast.For) else []
+                )
+                for call in ast.walk(stmt):
+                    if getattr(getattr(call, "func", None), "id", None) == "_wrap":
+                        mod, name = call.args[:2]
+                        names = (
+                            [name.value] if isinstance(name, ast.Constant) else looped
+                        )
+                        refs |= {(f"{PKG}.{mod.value}", n) for n in names}
+    assert (f"{PKG}.streaming.pipeline", "start_gold_job") in refs
+    assert (f"{PKG}.streaming.pipeline", "silver_stream_to_gold") in refs
+    missing = sorted(f"{m}.{n}" for m, n in refs if _lookup(m, n) is _MISSING)
+    assert not missing, missing

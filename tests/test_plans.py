@@ -2,147 +2,74 @@
 small-SF correctness tests: pushdown, pruning, join strategy, shuffle
 counts, top-K short-circuit. A regression here usually means a silent
 plan pathology (lost pushdown, accidental cartesian) rather than a wrong
-answer."""
+answer. Nested-loop joins are checked on the executed plan at two
+scales: each one's broadcast side must not grow with the input."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
+from pyspark.sql import functions as F
 
-from crypto_streaming_lakehouse_spark.plans.audit import audit
+from crypto_streaming_lakehouse_spark.plans.audit import audit, broadcast_nlj_rows
 from crypto_streaming_lakehouse_spark.registry import REGISTRY
+from crypto_streaming_lakehouse_spark.sources.tables import load_table
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, SF_DIR_LARGE
 
 
 def _audit(spark, name):
     return audit(REGISTRY[name].fn(spark, SF_DIR))
 
 
-# The brute-force ANN baselines intentionally broadcast the tiny query set
-# against a single corpus scan — that plan IS a BroadcastNestedLoopJoin
-# (tiny side broadcast, one pass over the corpus), and the n² dedup
-# baseline is an inequality self-join by definition. Everything else must
-# be cartesian-free.
-_NLJ_BY_DESIGN = {"q_ann_cosine_topk", "q_ann_lsh_topk", "q_dedup_embedding_cosine"}
-
-# Queries that attach a 1-row aggregate (corpus size, avgdl, node count,
-# collected stop-gram array) via an explicit broadcast cross join — a
-# scalar broadcast, not a pair explosion.
-_NLJ_BY_DESIGN |= {
-    "q_tfidf",
-    "q_pmi_collocations",
-    "q_bm25",
-    "q_pagerank",
-    "q_dedup_ngram_jaccard",
-    "q_dedup_containment",  # same collected stop-gram array broadcast
-    "q_kmeans",  # K-row centroid set broadcast against one corpus scan
-    "q_dq_expectations",  # 1-row scan-agg × 1-row RI-agg scalar cross join
-    "q_triangle_count",  # 1-row node/edge/wedge/triangle aggs cross-joined
-    "q_vocab_coverage",  # 1-row corpus-total agg broadcast onto top-K rows
-    "q_histogram",  # 1-row min/max extent agg broadcast onto the scan
-    "q_doc_cross_entropy",  # 1-row corpus-token-total broadcast onto docs
-    "q_dedup_semantic",  # K-row centroid set broadcast (k-means assign step)
-    "q_graph_assortativity",  # 1-row node-count agg cross-joined onto moments
-    "q_bigram_cross_entropy",  # 1-row corpus-token-total broadcast
-    "q_benford_digits",  # 1-row digit-total broadcast onto 9 groups
-    "q_lang_mixture_temperature",  # 1-row weight-normalizer broadcast
-    "q_conversion_latency",  # 1-row clicker-count agg cross-joined in
-    "q_hll_sketch_union",  # 1-row exact-distinct agg broadcast onto the verdict
-    "q_ccnet_buckets",  # 1-row LM-total + 1-row tercile aggs broadcast onto docs
-    "q_mutual_information",  # 1-row total + entropy aggs cross-joined in
-    "q_dsir_weights",  # 1-row token-total agg broadcast onto the bucket table
-    "q_nearest_centroid",  # 1-row folded centroid set broadcast (kmeans shape)
-    "q_ks_test",  # 1-row sample-size + point-count aggs cross-joined in
-    "q_pq_encode",  # 1-row folded codebook broadcast (kmeans assign shape)
-    "q_rrf_fusion",  # 1-row query-vector broadcast onto the corpus scan
-    "q_ann_recall_eval",  # composes the ANN NLJ baselines + 1-row truth-count
-    "q_chi_square",  # 1-row total + marginal-count aggs cross-joined in
-    "q_kcore_decompose",  # 1-row K-threshold + per-round count aggs
-    "q_psi_drift",  # 1-row global min/max range broadcast onto the scan
-    "q_silhouette",  # 1-row folded centroid set broadcast (kmeans shape)
-    "q_basket_lift",  # 1-row order-count agg broadcast onto the pair table
-    "q_kaplan_meier",  # 1-row corpus-end-timestamp agg broadcast onto users
-    "q_quantile_normalize",  # 1-row corpus-count agg broadcast onto ranks
-    "q_anova_oneway",  # 1-row grand-mean/k/n agg cross-joined onto k groups
-    "q_benjamini_hochberg",  # 1-row grand-mean + m agg cross-joined in
-    "q_jensen_shannon",  # 1-row token-total agg broadcast onto the vocab
-    "q_kendall_tau_topk",  # K×K inequality pair join on the CONSTANT-K set
-    "q_revenue_deciles",  # 1-row quantile-threshold agg broadcast onto rev
-    "q_rfm_segments",  # 1-row corpus-end + tercile-threshold broadcasts
-    "q_brown_forsythe",  # 1-row grand-mean agg cross-joined onto k groups
-    "q_markov_entropy_rate",  # 1-row transition-total broadcast onto states
-    "q_modularity_brand",  # 1-row edge-count agg broadcast onto communities
-    "q_pca_power_iteration",  # 1-row λ/norm/count aggs broadcast onto dims
-    "q_irls_logistic",  # 1-row standardizer + 1-row beta broadcasts per scan
-    "q_naive_bayes",  # languages-sized model + 1-row vocab/prior broadcasts
-    "q_knn_classifier",  # bounded query-set broadcast (q_ann_cosine_topk plan)
-    "q_target_encoding",  # 1-row global-prior broadcast onto the encoder table
-    "q_cv_folds",  # 1-row global-rate broadcast onto 5 fold rows
-    "q_logistic_calibration",  # 1-row standardizer/beta broadcasts per scan
-    "q_decision_stump",  # 9-row candidate-threshold + 1-row total broadcasts
-    "q_ann_ivf_trained_topk",  # 1-row folded trained-centroid broadcast
-    "q_ann_recall_trained",  # composes the ANN NLJ plans + 1-row truth-count
-    "q_ann_pq_adc_topk",  # 1-row folded codebook broadcast + tiny query-LUT side
-    "q_ann_pq_rerank",  # stage 1 is q_ann_pq_adc_topk's plan
-    "q_ann_pq_recall",  # composes the PQ plans + brute-force truth + 1-row count
-    "q_ann_ivfpq_topk",  # 1-row codebook broadcast; candidate join itself is equi
-    # round-12 PQ knobs: same designed shape as q_ann_pq_rerank (the ADC
-    # stage streams the code scan past a broadcast query-LUT side; the
-    # R-scaled variants add a 1-row corpus-count broadcast to the filter)
-    "q_ann_pq_rerank_rscaled",
-    "q_ann_pq8_rerank",
-    "q_ann_pq8_rerank_rscaled",
-    "q_ann_pq_knobs_recall",  # composes all four + brute-force truth
-    # round-12b retrieval-mining family: both ride the ANN brute-force
-    # shape — a bounded query-set broadcast streamed past the corpus
-    # scan (q_ann_cosine_topk's designed plan); MMR's greedy stages
-    # then operate on CAND-bounded per-query tables.
-    "q_hard_negative_mining",  # 10-row query broadcast × corpus scan
-    "q_mmr_rerank",  # 10-row query broadcast × corpus scan + bounded stages
-    # round-13 additions:
-    "q_mmr_rerank_wide",  # same designed plan as q_mmr_rerank (CAND=100)
-    "q_hard_negative_mining_ivfpq",  # 1-row codebook broadcast (PQ encode)
-    # + broadcast query-LUT side; the cell-candidate join itself is equi
-    "q_hard_negative_mining_adc8",  # code scan × broadcast query-LUT side
-    # (q_ann_pq8_rerank's designed ADC shape) + 1-row corpus-count
-    # broadcast folded into the R-scaled rank filter
-    "q_hard_negative_band_recall",  # composes the three miners + 1-row
-    # n_exact/n_mined/n_recovered count aggs cross-joined into one row
-    "q_bpe_merge_round2",  # 1-row top-merge broadcast onto the
-    # re-segmentation scan (the kmeans-assign scalar-broadcast shape)
-    "q_bpe_learn3",  # three chained 1-row top-merge broadcasts (same shape)
-    "q_retrieval_rank_metrics",  # composes the ANN NLJ baselines (truth +
-    # three method plans) — the eval itself joins k×queries-row lists
-    "q_contrastive_batches",  # composes the brute-force truth + the adc8
-    # miner (both designed broadcast shapes); assembly itself is equi-only
-    "q_bpe_compression",  # same chained 1-row top-merge broadcasts as
-    # q_bpe_learn3, plus 1-row stream-length aggs cross-joined in
-    "q_ivf_cell_occupancy",  # folded centroid-set broadcasts (kmeans
-    # shape) + a 1-row corpus-count broadcast for the share column
-    "q_pq_distortion",  # 1-row folded codebook broadcast per K (the
-    # q_pq_encode shape); output is 2xPQ_SUBS rows
-    "q_ann_ivfpq_trained_topk",  # folded trained-centroid + codebook
-    # broadcasts (the q_ann_ivfpq_topk designed shape, trained cells)
-    "q_ann_ivfpq_trained_recall",  # composes both IVF-PQ plans +
-    # brute-force truth + 1-row count aggs
-    "q_hard_negative_mining_ivfpq_trained",  # trained-centroid + codebook
-    # broadcasts (the q_ann_ivfpq_trained_topk designed shape) + band tail
-    # round-14 additions:
-    "q_ivfpq_upsert_distortion",  # 1-row folded codebook broadcast +
-    # 1-row cutoff broadcast onto one corpus scan (q_pq_distortion shape)
-    "q_opq_rotation_distortion",  # 1-row folded codebook broadcast per
-    # variant (the q_pq_distortion designed shape, one scan per layout)
-    "q_ivfpq_assignment_churn",  # two folded trained-centroid broadcasts
-    # (kmeans-assign shape) + a 1-row cutoff broadcast; the vec_id join
-    # between the two assignments is equi
+# cosine_topk's JVM path joins the query side onto the corpus with no
+# broadcast hint, so Spark broadcasts the corpus: the build side of these
+# queries' nested-loop join grows with the embeddings table.
+_CORPUS_BROADCAST = pytest.mark.xfail(
+    raises=AssertionError,
+    strict=True,
+    reason="cosine_topk's JVM path broadcasts the corpus side",
+)
+_COSINE_TOPK_CONSUMERS = {
+    "q_ann_cosine_topk",
+    "q_ann_recall_eval",
+    "q_ann_recall_trained",
+    "q_contrastive_batches",
+    "q_retrieval_rank_metrics",
 }
 
 
-@pytest.mark.parametrize("name", sorted(REGISTRY))
+@pytest.mark.parametrize(
+    "name",
+    [
+        pytest.param(n, marks=_CORPUS_BROADCAST) if n in _COSINE_TOPK_CONSUMERS else n
+        for n in sorted(REGISTRY)
+    ],
+)
 def test_no_accidental_cartesian(spark, name):
-    if name in _NLJ_BY_DESIGN:
-        pytest.skip("broadcast-tiny-side NLJ is the designed plan")
-    assert _audit(spark, name).nested_loop_joins == 0
+    # A nested-loop join is scale-safe only while its broadcast side does
+    # not grow with the input. Execute the query at two scales: every
+    # nested-loop join left at SF_DIR_LARGE must broadcast as many rows as
+    # one at SF_DIR (a size dispatch may drop one), and none may be a
+    # CartesianProduct.
+    df = REGISTRY[name].fn(spark, SF_DIR)
+    if audit(df).nested_loop_joins == 0:
+        return
+    small = broadcast_nlj_rows(df)
+    large = broadcast_nlj_rows(REGISTRY[name].fn(spark, SF_DIR_LARGE))
+    assert None not in small + large
+    assert not Counter(large) - Counter(small), (small, large)
+
+
+def test_broadcast_nlj_rows_reads_executed_plan(spark):
+    # A 1-row aggregate broadcast onto a scan reads 1 row at any scale; a
+    # broadcast scan reads the table's row count, which grows with scale.
+    for sf in (SF_DIR, SF_DIR_LARGE):
+        ev = load_table(spark, sf, "events").select("event_id")
+        one = ev.agg(F.count("*").alias("n"))
+        assert broadcast_nlj_rows(ev.crossJoin(one)) == [1]
+        assert broadcast_nlj_rows(one.crossJoin(F.broadcast(ev))) == [ev.count()]
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -205,8 +132,8 @@ def test_minhash_bounded_shuffles(spark):
 
 
 def test_ann_brute_force_broadcasts_queries(spark):
-    # the tiny query side must be the broadcast side: one corpus scan,
-    # no shuffle of the big side.
+    # at least one broadcast. The nested-loop join broadcasts the corpus,
+    # not the query side: see _CORPUS_BROADCAST.
     a = _audit(spark, "q_ann_cosine_topk")
     assert a.broadcast_exchanges >= 1
 
