@@ -22,6 +22,7 @@ import time
 import duckdb
 
 from bench import HEADLINE
+from tests.oracle import duckdb_connect
 
 
 def main() -> None:
@@ -29,15 +30,9 @@ def main() -> None:
     threads = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
 
     from crypto_streaming_lakehouse_spark.registry import REGISTRY
-    from crypto_streaming_lakehouse_spark.sources.tables import TABLES
 
-    con = duckdb.connect()
-    con.sql("SET TimeZone='UTC'")
+    con = duckdb_connect(sf_dir)
     con.sql(f"SET threads={int(threads)}")
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
 
     names = [
         n for n in HEADLINE if n in REGISTRY and REGISTRY[n].sql is not None

@@ -27,13 +27,21 @@ Construction (copy c ∈ 0..9; copy 0 is the original rows verbatim):
 - ``events`` keeps its time range (10× density = busier stream, the
   realistic way traffic scales) with event_id/user_id shifted.
 
+The construction lives in ``amplify(spark, src, out_dir)``, which has
+two consumers: this script's ``main()`` (the sf1.0 bench trend and the
+``CORRECTNESS_FULL_SF1.json`` attestation read its output) and
+``scripts/scale_probe.py`` (the SCALE.md "Empirical 10× scale-up"
+factors), so every 10× figure reads data built by the same code.
+
 Usage: python scripts/gen_sf1.py [out_dir]   (default .tmp/sf1.0)
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+from functools import reduce
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -98,41 +106,35 @@ def _copy(df: DataFrame, table: str, c: int) -> DataFrame:
     return out
 
 
+def amplify(spark, src: str, out_dir: str) -> None:
+    """Write the 10× copy of the fixture dir ``src`` into ``out_dir``:
+    one parquet file per table, the fixture's own layout."""
+    from crypto_streaming_lakehouse_spark.sources.tables import TABLES, load_table
+
+    os.makedirs(out_dir, exist_ok=True)
+    for table in TABLES:
+        df = load_table(spark, src, table)
+        n = COPIES if table in KEY_COLS else 1
+        full = reduce(DataFrame.unionByName, [_copy(df, table, c) for c in range(n)])
+        dest = os.path.join(out_dir, f"{table}.parquet")
+        tmp = dest + ".dir"
+        full.coalesce(1).write.mode("overwrite").parquet(tmp)
+        part_file = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+        os.replace(os.path.join(tmp, part_file), dest)
+        shutil.rmtree(tmp)
+        print(f"{table}: {spark.read.parquet(dest).count()} rows -> {dest}",
+              file=sys.stderr, flush=True)
+
+
 def main() -> None:
     out_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         ".tmp", "sf1.0",
     )
     from crypto_streaming_lakehouse_spark.session import get_spark
-    from crypto_streaming_lakehouse_spark.sources.tables import load_table
 
     spark = get_spark("gen-sf1")
-    os.makedirs(out_dir, exist_ok=True)
-    for table in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        df = load_table(spark, SRC, table)
-        if table in KEY_COLS:
-            parts = [_copy(df, table, c) for c in range(COPIES)]
-            full = parts[0]
-            for p in parts[1:]:
-                full = full.unionByName(p)
-        else:
-            full = df
-        dest = os.path.join(out_dir, f"{table}.parquet")
-        # Match the fixture layout: ONE parquet file per table (the
-        # scan-cache re-slices for bench sessions, same as sf0.1).
-        tmp = dest + ".dir"
-        full.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part_file = next(
-            f for f in os.listdir(tmp) if f.endswith(".parquet")
-        )
-        os.replace(os.path.join(tmp, part_file), dest)
-        import shutil
-
-        shutil.rmtree(tmp)
-        print(f"{table}: {full.count()} rows -> {dest}", flush=True)
+    amplify(spark, SRC, out_dir)
     spark.stop()
 
 
