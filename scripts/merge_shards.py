@@ -1,6 +1,6 @@
 """Merge parallel from-scratch shards into one full-sweep artifact.
 
-Counterpart of ``full_correctness.py --shard=i/n``: each shard runs a
+Counterpart of ``full_correctness.py --shard I/N``: each shard runs a
 disjoint residue class of the registry in its own process (so a
 memory-giant row like q_edit_distance_join's 57 GB compare cannot take
 down hours of other rows) and stamps its own meta with the git commit
@@ -19,10 +19,91 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from full_correctness import _artifact_path  # noqa: E402
+from full_correctness import _ATTESTED, _artifact_path, _git, _meta, _pins  # noqa: E402
+
+
+def _span_head(commits: set[str]) -> str:
+    """The one commit the shards attest. Shards stamp the commit at
+    COMPLETION time, so an artifact-only commit landing while a long
+    shard still runs makes the set span two commits even though every
+    shard executed byte-identical engine code. The span is accepted IFF
+    no diff between spanned commits touches attested code, and the
+    commits are linear; the DESCENDANT is pinned (the per-shard metas
+    keep the full span auditable)."""
+    ordered = sorted(commits)
+    for a, b in zip(ordered, ordered[1:]):
+        touched = [
+            p
+            for p in _git("diff", "--name-only", f"{a}..{b}", check=True).split()
+            if p.startswith(_ATTESTED)
+        ]
+        if touched:
+            raise SystemExit(
+                f"shards span commits {commits} whose diff touches "
+                f"attested code: {touched[:5]} — not one attestation"
+            )
+    # c is the head iff no other commit has a commit c lacks; git
+    # failures (unknown object, corrupt repo) raise rather than read as
+    # "not an ancestor" (ADVICE r14).
+    for c in ordered:
+        if not any(_git("rev-list", "-n1", f"{c}..{o}", check=True) for o in ordered):
+            return c
+    raise SystemExit(
+        f"shards span commits {ordered} with no linear "
+        "descendant (divergent branches) — not one attestation"
+    )
+
+
+def _check_dirty(shard_metas: list[dict], rows: dict, registry: dict) -> None:
+    """The operator override for the one legitimate dirty case: an
+    artifact-only file (a CORRECTNESS json from a concurrent sweep) was
+    uncommitted when a long shard completed. It does NOT take the
+    operator's word for it: every dirty shard must have RECORDED its
+    dirty files and all must be CORRECTNESS_FULL_* files — a dirty
+    harness file, which no row's pins cover, refuses the merge (ADVICE
+    r14); the CURRENT tree must be clean (artifact rewrites excepted);
+    and every merged row's pins must match the live registry, which
+    proves the attested code is exactly the committed code."""
+    for m in shard_metas:
+        if not m.get("git_dirty"):
+            continue
+        recorded = m.get("dirty_files")
+        if recorded is None:
+            raise SystemExit(
+                f"dirty shard {m['file']} predates dirty_files "
+                "recording — re-run the shard on a clean tree"
+            )
+        non_artifact = [
+            p for p in recorded if not os.path.basename(p).startswith("CORRECTNESS_FULL_")
+        ]
+        if non_artifact:
+            raise SystemExit(
+                f"dirty shard {m['file']} had non-artifact dirty "
+                f"files at run time: {non_artifact[:5]} — the "
+                "override only covers artifact-only dirt"
+            )
+    tracked_dirty = [
+        ln
+        for ln in _git("status", "--porcelain", check=True).splitlines()
+        if not ln.startswith("??") and not ln.split()[-1].startswith("CORRECTNESS_FULL_")
+    ]
+    if tracked_dirty:
+        raise SystemExit(
+            "dirty-shard override requires a clean tree (artifact "
+            f"rewrites excepted); found: {tracked_dirty[:5]}"
+        )
+    bad_pins = [
+        n
+        for n, d in registry.items()
+        if n in rows and (rows[n].get("oracle_sha"), rows[n].get("impl_sha")) != _pins(d)
+    ]
+    if bad_pins:
+        raise SystemExit(
+            "dirty-shard override refused — rows do not pin the "
+            f"committed code: {bad_pins[:5]}"
+        )
 
 
 def main() -> int:
@@ -50,159 +131,13 @@ def main() -> int:
     commits = {m.get("git_commit") for m in shard_metas}
     if "" in commits or None in commits:
         raise SystemExit(f"shards missing commit stamps: {commits}")
-    if len(commits) != 1:
-        # Shards stamp the commit at COMPLETION time, so an
-        # artifact-only commit landing while a long shard still runs
-        # makes the set span two commits even though every shard
-        # executed byte-identical engine code. Accept the span IFF the
-        # diff between every pair of spanned commits touches NOTHING
-        # the attestation covers (the engine package, the entry module,
-        # the oracle/compare machinery) — verified against git right
-        # here, and the full span is recorded in the merged meta.
-        import subprocess
-
-        attested_prefixes = (
-            "crypto_streaming_lakehouse_spark/",
-            "__spark_entry__.py",
-            "tests/oracle.py",
-            "scripts/full_correctness.py",
-        )
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-        def _git(*args: str) -> str:
-            return subprocess.run(
-                ["git", *args],
-                capture_output=True,
-                text=True,
-                cwd=repo,
-                check=True,
-            ).stdout
-
-        ordered = sorted(commits)
-        for a, b in zip(ordered, ordered[1:]):
-            touched = [
-                p
-                for p in _git("diff", "--name-only", f"{a}..{b}").split()
-                if p.startswith(attested_prefixes)
-            ]
-            if touched:
-                raise SystemExit(
-                    f"shards span commits {commits} whose diff touches "
-                    f"attested code: {touched[:5]} — not one attestation"
-                )
-        # Pin the DESCENDANT commit (the others are its ancestors).
-        def _is_ancestor(o: str, c: str) -> bool:
-            rc = subprocess.run(
-                ["git", "merge-base", "--is-ancestor", o, c], cwd=repo
-            ).returncode
-            # 0 = ancestor, 1 = not an ancestor; anything else is a git
-            # failure (unknown object, corrupt repo) that must not be
-            # conflated with "not an ancestor" (ADVICE r14).
-            if rc not in (0, 1):
-                raise SystemExit(
-                    f"git merge-base --is-ancestor {o} {c} failed "
-                    f"(rc={rc}) — cannot establish the shard span"
-                )
-            return rc == 0
-
-        span_head = next(
-            (
-                c
-                for c in commits
-                if all(o == c or _is_ancestor(o, c) for o in commits)
-            ),
-            None,
-        )
-        if span_head is None:
-            raise SystemExit(
-                f"shards span commits {sorted(commits)} with no linear "
-                "descendant (divergent branches) — not one attestation"
-            )
+    head = commits.pop() if len(commits) == 1 else _span_head(commits)
     dirty = [m["file"] for m in shard_metas if m.get("git_dirty")]
     accept_dirty = os.environ.get("SPARK_GRAFT_ACCEPT_DIRTY_SHARDS", "")
     if dirty and not accept_dirty:
         raise SystemExit(f"shards ran on a dirty tree: {dirty}")
     if dirty:
-        # The override's first gate: each dirty shard must have RECORDED
-        # its dirty file list at run time (full_correctness stamps
-        # dirty_files since round 15), and every dirty file must be
-        # artifact-only. A dirty attested file — including the harness
-        # itself (scripts/full_correctness.py, tests/oracle.py), which
-        # the impl_sha/oracle_sha pins below do NOT cover — refuses the
-        # merge (ADVICE r14): only CORRECTNESS_FULL_* files pass.
-        for m in shard_metas:
-            if not m.get("git_dirty"):
-                continue
-            recorded = m.get("dirty_files")
-            if recorded is None:
-                raise SystemExit(
-                    f"dirty shard {m['file']} predates dirty_files "
-                    "recording — re-run the shard on a clean tree"
-                )
-            non_artifact = [
-                p
-                for p in recorded
-                if not os.path.basename(p).startswith("CORRECTNESS_FULL_")
-            ]
-            if non_artifact:
-                raise SystemExit(
-                    f"dirty shard {m['file']} had non-artifact dirty "
-                    f"files at run time: {non_artifact[:5]} — the "
-                    "override only covers artifact-only dirt"
-                )
-        # Operator override for the one legitimate dirty case: an
-        # artifact-only file (a CORRECTNESS json from a concurrent
-        # sweep) was uncommitted when a long shard completed. The
-        # override does NOT take the operator's word for it — it
-        # requires (a) the CURRENT tree to be clean, and (b) every
-        # merged row's impl_sha and oracle_sha to match the LIVE
-        # registry at HEAD, which proves the attested code is exactly
-        # the committed code (the same pin test_artifact_sync enforces,
-        # applied at merge time). The override and its reason are
-        # recorded in _meta for the auditor.
-        import hashlib
-        import subprocess as _sp
-
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        now_dirty = _sp.run(
-            ["git", "status", "--porcelain"],
-            capture_output=True,
-            text=True,
-            cwd=repo,
-            check=True,
-        ).stdout.strip()
-        tracked_dirty = [
-            ln
-            for ln in now_dirty.splitlines()
-            if not ln.startswith("??")
-            and not ln.split()[-1].startswith("CORRECTNESS_FULL_")
-        ]
-        if tracked_dirty:
-            raise SystemExit(
-                "dirty-shard override requires a clean tree (artifact "
-                f"rewrites excepted); found: {tracked_dirty[:5]}"
-            )
-        from crypto_streaming_lakehouse_spark.provenance import impl_sha
-
-        bad_pins = []
-        for n, d in REGISTRY.items():
-            rec = rows.get(n)
-            if rec is None:
-                continue
-            wo = (
-                hashlib.sha256(d.sql.encode()).hexdigest()[:16]
-                if d.sql is not None
-                else None
-            )
-            if rec.get("oracle_sha") != wo or rec.get("impl_sha") != impl_sha(
-                d.fn
-            ):
-                bad_pins.append(n)
-        if bad_pins:
-            raise SystemExit(
-                "dirty-shard override refused — rows do not pin the "
-                f"committed code: {bad_pins[:5]}"
-            )
+        _check_dirty(shard_metas, rows, REGISTRY)
     missing = set(REGISTRY) - set(rows)
     if missing:
         raise SystemExit(f"registry not covered: {sorted(missing)[:10]}")
@@ -211,35 +146,15 @@ def main() -> int:
         raise SystemExit(f"rows not in live registry: {sorted(extra)[:10]}")
 
     out = {n: rows[n] for n in REGISTRY}  # registry order, diff-stable
-
-    def _is_timeout(r: dict) -> bool:
-        return str(r.get("err") or "").startswith("oracle_timeout")
-
-    meta = {
-        "sf_dir": sf_dir,
-        "mode": f"full-from-scratch-sharded({len(shard_metas)})",
-        # When shards span artifact-only commits (verified above), the
-        # descendant commit is recorded and the per-shard metas below
-        # keep the full span auditable.
-        "git_commit": span_head if len(commits) > 1 else commits.pop(),
-        "git_dirty": False,
-        "n_queries": len(out),
-        "n_hash_match": sum(1 for r in out.values() if r["hash_match"]),
-        "n_rows_only": sum(1 for r in out.values() if r["err"] == "no_oracle"),
-        "n_oracle_timeout": sum(1 for r in out.values() if _is_timeout(r)),
-        "n_fail": sum(
-            1
-            for r in out.values()
-            if not r["hash_match"]
-            and r["err"] != "no_oracle"
-            and not _is_timeout(r)
-        ),
-        "wall_s": max(m["wall_s"] for m in shard_metas),
-        "wall_s_serial_equivalent": round(
-            sum(m["wall_s"] for m in shard_metas), 1
-        ),
-        "shards": shard_metas,
-    }
+    meta = _meta(
+        sf_dir,
+        f"full-from-scratch-sharded({len(shard_metas)})",
+        out,
+        stamp={"git_commit": head, "git_dirty": False},
+        wall_s=max(m["wall_s"] for m in shard_metas),
+        wall_s_serial_equivalent=round(sum(m["wall_s"] for m in shard_metas), 1),
+        shards=shard_metas,
+    )
     if dirty:
         meta["dirty_shards_accepted"] = {
             "files": dirty,

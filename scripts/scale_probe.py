@@ -13,6 +13,7 @@ Defaults to the round-2 additions. Results are recorded in SCALE.md's
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import tempfile
 
@@ -48,22 +49,30 @@ def main() -> None:
     spark = bench_session("scale-probe")
 
     from crypto_streaming_lakehouse_spark.registry import REGISTRY
+    from crypto_streaming_lakehouse_spark.sources.scan_cache import _cache_root
     from scripts.gen_sf1 import COPIES, amplify
 
     with tempfile.TemporaryDirectory(prefix="amplified_") as big:
-        print(f"amplifying {BASE} x{COPIES} -> {big}", file=sys.stderr)
-        amplify(spark, BASE, big)
+        # The scan cache keeps a re-sliced copy of each table under a dir
+        # named after the fixture's path; the temp dir's copy is useless
+        # once the temp dir is gone, so it goes with it.
+        slug = os.path.realpath(big).strip("/").replace("/", "_")
+        try:
+            print(f"amplifying {BASE} x{COPIES} -> {big}", file=sys.stderr)
+            amplify(spark, BASE, big)
 
-        # time_cold clears cross-query memos before every timed run, so
-        # each pays its own materializations — the probe measures how ONE
-        # query scales, not how a warm cache performs.
-        print(f"{'query':30s} {'base':>7s} {'10x':>7s} {'factor':>7s}")
-        for n in names:
-            if n not in REGISTRY:
-                continue
-            b = time_cold(spark, n, BASE, 2)
-            a = time_cold(spark, n, big, 2)
-            print(f"{n:30s} {b:7.2f} {a:7.2f} {a / b:6.1f}x")
+            # time_cold clears cross-query memos before every timed run, so
+            # each pays its own materializations — the probe measures how ONE
+            # query scales, not how a warm cache performs.
+            print(f"{'query':30s} {'base':>7s} {'10x':>7s} {'factor':>7s}")
+            for n in names:
+                if n not in REGISTRY:
+                    continue
+                b = time_cold(spark, n, BASE, 2)
+                a = time_cold(spark, n, big, 2)
+                print(f"{n:30s} {b:7.2f} {a:7.2f} {a / b:6.1f}x")
+        finally:
+            shutil.rmtree(_cache_root() / slug, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -105,8 +105,8 @@ def test_module_constant_edit_marks_consumer_stale():
 
 def test_impl_sha_matches_full_correctness_script():
     """scripts/full_correctness.py and tests/test_artifact_sync.py must
-    agree on the formula — both delegate here; this guards against the
-    formula being reintroduced inline in either place."""
+    agree on the formula — both use provenance.impl_sha itself; this
+    guards against the formula being reintroduced inline in the script."""
     import importlib.util
     import pathlib
 
@@ -115,7 +115,4 @@ def test_impl_sha_matches_full_correctness_script():
     )
     fc = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(fc)
-    from crypto_streaming_lakehouse_spark.registry import REGISTRY
-
-    fn = REGISTRY["q_ann_pq_rerank"].fn
-    assert fc._impl_sha(fn) == P.impl_sha(fn)
+    assert fc.impl_sha is P.impl_sha

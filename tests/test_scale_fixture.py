@@ -82,11 +82,13 @@ def test_amplified_copies_have_disjoint_key_ranges(amplified):
 
 def test_scale_probe_short(tmp_path):
     """scripts/scale_probe.py end to end on the smallest fixture: amplify,
-    time one query at both scales, print its factor row."""
+    time one query at both scales, print its factor row, and leave no
+    scan-cache copy of the deleted amplified dir behind."""
+    cache = tmp_path / "scan_cache"
     env = {
         **os.environ,
         "SPARK_GRAFT_SF_DIR": SF_DIR,
-        "SPARK_GRAFT_SCAN_CACHE_DIR": str(tmp_path / "scan_cache"),
+        "SPARK_GRAFT_SCAN_CACHE_DIR": str(cache),
         "TMPDIR": str(tmp_path),
     }
     proc = subprocess.run(
@@ -104,3 +106,5 @@ def test_scale_probe_short(tmp_path):
         if re.fullmatch(r"q_local_supplier_volume\s+[\d.]+\s+[\d.]+\s+[\d.]+x", line)
     ]
     assert len(rows) == 1, proc.stdout
+    assert cache.is_dir()
+    assert not [p.name for p in cache.iterdir() if "amplified_" in p.name]
