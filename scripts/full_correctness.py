@@ -34,7 +34,10 @@ default); a capped oracle demotes its row to ``err="oracle_timeout>..."``.
 
 The artifact filename follows the scale: the default sf0.01 sweep writes
 CORRECTNESS_FULL_LOCAL.json; an sf0.1 sweep writes
-CORRECTNESS_FULL_SF01.json (second-scale evidence, VERDICT r08 item 1).
+CORRECTNESS_FULL_SF01.json (second-scale evidence, VERDICT r08 item 1);
+an sf1.0 sweep writes CORRECTNESS_FULL_SF1.json. Every mode that writes
+(a full sweep, ``--update``, ``--shard``, ``merge_shards.py``) exits on
+any other scale; a restricted run takes any scale.
 """
 
 from __future__ import annotations
@@ -79,10 +82,16 @@ _MASK = (1 << 256) - 1
 
 
 def _artifact_path(sf_dir: str) -> str:
-    name = _ARTIFACT_BY_SCALE.get(
-        os.path.basename(os.path.normpath(sf_dir)), "CORRECTNESS_FULL_LOCAL.json"
-    )
-    return os.path.join(_REPO, name)
+    """The artifact of ``sf_dir``'s scale; exits on a scale that has none,
+    so no sweep at another scale overwrites an attested one."""
+    scale = os.path.basename(os.path.normpath(sf_dir))
+    if scale not in _ARTIFACT_BY_SCALE:
+        raise SystemExit(
+            f"no correctness artifact for scale {scale!r} (known scales: "
+            f"{', '.join(_ARTIFACT_BY_SCALE)}); a restricted run "
+            "(<sf_dir> names_csv) writes nothing and takes any scale"
+        )
+    return os.path.join(_REPO, _ARTIFACT_BY_SCALE[scale])
 
 
 def _git(*args: str, check: bool = False) -> str:
@@ -420,12 +429,13 @@ def _parse(argv: list[str]) -> argparse.Namespace:
 def main() -> int:
     args = _parse(sys.argv[1:])
     names = set(args.names_csv.split(",")) if args.names_csv else None
+    restricted = names is not None and not (args.update or args.shard)
+    artifact = None if restricted else _artifact_path(args.sf_dir)
 
     from crypto_streaming_lakehouse_spark.registry import REGISTRY
     from crypto_streaming_lakehouse_spark.session import get_spark
     from tests.oracle import duckdb_connect
 
-    artifact = _artifact_path(args.sf_dir)
     timeout_s = float(os.environ.get("SPARK_GRAFT_DUCKDB_TIMEOUT_S", "0"))
     run = names  # None: every registry query
     prior: dict[str, dict] = {}
@@ -493,7 +503,7 @@ def main() -> int:
         if pool.cache_info().currsize:
             pool().terminate()
 
-    if names is not None and mode == "full-from-scratch":
+    if restricted:
         print(json.dumps(out, indent=1))
         spark.stop()
         return 0 if all(

@@ -11,6 +11,9 @@ commit — then writes the combined artifact in registry order with
 (max of shards) and the serial-equivalent wall (sum of shards).
 
 Usage: python scripts/merge_shards.py <sf_dir> <shard_file> [...]
+
+``sf_dir`` names the scale, and so the artifact written; a scale with no
+artifact of its own exits before anything is read.
 """
 
 from __future__ import annotations
@@ -113,6 +116,7 @@ def main() -> int:
         print("usage: merge_shards.py <sf_dir> <shard_file> [...]")
         return 2
 
+    artifact = _artifact_path(sf_dir)  # exits on a scale with no artifact
     from crypto_streaming_lakehouse_spark.registry import REGISTRY
 
     rows: dict[str, dict] = {}
@@ -162,11 +166,10 @@ def main() -> int:
             "verified": "clean HEAD + every row's impl_sha/oracle_sha "
             "matches the live registry at merge time",
         }
-    path = _artifact_path(sf_dir)
-    with open(path, "w") as f:
+    with open(artifact, "w") as f:
         json.dump({"_meta": meta, **out}, f, indent=1)
     print(json.dumps({k: v for k, v in meta.items() if k != "shards"}))
-    print(f"wrote {path}")
+    print(f"wrote {artifact}")
     return 0 if meta["n_fail"] == 0 else 1
 
 

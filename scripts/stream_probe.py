@@ -10,6 +10,10 @@ concurrently for ``--duration`` seconds, samples every query's
 
 - per-stage sustained throughput (median + max of the per-batch
   ``processedRowsPerSecond`` across the steady-state window),
+- per-stage fixed commit cost per batch: the median offset-WAL plus
+  commit-log write (``walCommit`` + ``commitOffsets``) and the median
+  state-store commit summed over the stateful operator's tasks
+  (``stateOperators[0].commitTimeMs``; ``None`` for stateless bronze),
 - rows and data files landed per layer (the file count shows a
   regression in sink layout, e.g. gold no longer clustered by its
   partition columns),
@@ -180,6 +184,16 @@ def run_probe(
             for p in steady
             if p.get("processedRowsPerSecond")
         ]
+        commits = [
+            p["durationMs"].get("walCommit", 0)
+            + p["durationMs"].get("commitOffsets", 0)
+            for p in steady
+        ]
+        state_commits = [
+            p["stateOperators"][0]["commitTimeMs"]
+            for p in steady
+            if p.get("stateOperators")
+        ]
         rec = {
             "batches": len(steady),
             "rows_processed": int(sum(p["numInputRows"] for p in steady)),
@@ -187,6 +201,10 @@ def run_probe(
             if rates
             else None,
             "rows_per_sec_max": round(max(rates), 1) if rates else None,
+            "commit_ms_p50": statistics.median(commits) if commits else None,
+            "state_commit_ms_p50": statistics.median(state_commits)
+            if state_commits
+            else None,
         }
         state_ops = (steady[-1].get("stateOperators") or []) if steady else []
         if state_ops:

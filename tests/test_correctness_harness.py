@@ -156,6 +156,62 @@ def test_merge_refuses_commit_span_touching_attested_code(tmp_path, merge):
     assert not merge.out.exists()
 
 
+class _SparkStarted(Exception):
+    pass
+
+
+@pytest.mark.parametrize(
+    "argv",
+    [[], ["--update"], ["--shard", "0/2"], ["q_groupby_agg"]],
+    ids=["sweep", "update", "shard", "restricted"],
+)
+def test_unmapped_scale_writes_no_artifact(argv, tmp_path, monkeypatch):
+    """A full sweep, ``--update`` or ``--shard`` at a scale with no
+    artifact of its own (sf0.001) exits before Spark starts, naming the
+    known scales, and leaves the sf0.01 artifact byte-identical: such a
+    scale used to fall through to CORRECTNESS_FULL_LOCAL.json. A
+    restricted run writes nothing and still reaches Spark."""
+    import crypto_streaming_lakehouse_spark.session as session
+
+    fc = _load("full_correctness")
+    artifact = tmp_path / "CORRECTNESS_FULL_LOCAL.json"
+    artifact.write_bytes((_REPO / "CORRECTNESS_FULL_LOCAL.json").read_bytes())
+    before = artifact.read_bytes()
+    monkeypatch.setattr(fc, "_REPO", str(tmp_path))
+
+    def no_spark(*args, **kwargs):
+        raise _SparkStarted
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    monkeypatch.setattr(
+        sys, "argv", ["full_correctness.py", str(tmp_path / "sf0.001"), *argv]
+    )
+    if argv == ["q_groupby_agg"]:
+        with pytest.raises(_SparkStarted):
+            fc.main()
+    else:
+        with pytest.raises(SystemExit, match="sf0.01, sf0.1, sf1.0"):
+            fc.main()
+    assert artifact.read_bytes() == before
+
+
+def test_merge_refuses_unmapped_scale(tmp_path, monkeypatch):
+    """merge_shards.py at a scale with no artifact of its own exits,
+    naming the known scales, and leaves the sf0.01 artifact as it was."""
+    ms = _load("merge_shards")
+    artifact = tmp_path / "CORRECTNESS_FULL_LOCAL.json"
+    artifact.write_bytes((_REPO / "CORRECTNESS_FULL_LOCAL.json").read_bytes())
+    before = artifact.read_bytes()
+    monkeypatch.setitem(ms._artifact_path.__globals__, "_REPO", str(tmp_path))
+    paths = _write(tmp_path, _shards())
+    monkeypatch.setattr(
+        sys, "argv", ["merge_shards.py", str(tmp_path / "sf0.001"), *map(str, paths)]
+    )
+    with pytest.raises(SystemExit, match="sf0.01, sf0.1, sf1.0"):
+        ms.main()
+    assert artifact.read_bytes() == before
+
+
 def test_shard_and_update_are_mutually_exclusive(monkeypatch, capsys):
     fc = _load("full_correctness")
     monkeypatch.setattr(

@@ -10,6 +10,8 @@ guarantees for these plans.
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -868,6 +870,191 @@ def test_checkpoint_keeps_its_state_provider(spark, bronze_dir, tmp_path):
     assert _rowset(streamed, cols) == _rowset(batch, cols)
 
 
+@contextlib.contextmanager
+def _process_starts(spark, jfr_file):
+    """Record the driver JVM's ``jdk.ProcessStart`` events (JDK 17+) in an
+    in-process JFR recording; yields the list of started commands, filled
+    when the block exits."""
+    jvm = spark.sparkContext._jvm
+    rec = jvm.jdk.jfr.Recording()
+    commands: list[str] = []
+    try:
+        rec.enable("jdk.ProcessStart")
+        rec.start()
+        yield commands
+        rec.stop()
+        path = jvm.java.io.File(str(jfr_file)).toPath()
+        rec.dump(path)
+        events = jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(path)
+        commands.extend(e.getString("command") for e in events)
+    finally:
+        rec.close()
+
+
+def _write_records(spark, path, n_trades=2000, n_files=3):
+    """Kafka-record-shaped parquet for a file-source replay: ``n_trades``
+    trades one second apart over 3 symbols, appended as ``n_files`` files
+    in event-time order, every 50th record sent twice."""
+    per_file = n_trades // n_files
+    for i in range(n_files):
+        ids = spark.range(i * per_file, (i + 1) * per_file, numPartitions=1)
+        ids = ids.unionAll(ids.where(F.col("id") % 50 == 0))
+        ms = F.lit(1_700_000_000_000) + F.col("id") * 1000
+        payload = F.to_json(
+            F.struct(
+                F.lit("kraken").alias("exchange"),
+                F.concat(F.lit("SYM"), F.col("id") % 3).alias("symbol"),
+                (F.col("id") % 100 * 1.5 + 1).alias("price"),
+                F.lit(0.1).alias("size"),
+                F.when(F.col("id") % 2 == 0, "buy").otherwise("sell").alias("side"),
+                F.lit("market").alias("order_type"),
+                ms.alias("ts_event"),
+                (ms + 50).alias("ts_ingest"),
+            )
+        )
+        ids.select(
+            F.col("id").cast("string").cast("binary").alias("key"),
+            payload.cast("binary").alias("value"),
+            F.lit("crypto.trades").alias("topic"),
+            F.lit(0).alias("partition"),
+            F.col("id").alias("offset"),
+            F.timestamp_millis(ms).alias("timestamp"),
+            F.lit(0).alias("timestampType"),
+        ).coalesce(1).write.mode("append").parquet(path)
+
+
+def test_medallion_replay_forks_no_readlink(spark, tmp_path):
+    """Committing a micro-batch forks no ``readlink`` process. Spark's
+    default checkpoint file manager renames every checkpoint file through
+    Hadoop's FileContext, which without native IO shells out to
+    ``readlink`` twice per rename (and again per ``.crc``): on this
+    2000-trade records → bronze → silver → gold replay (3 silver
+    batches, 8 shuffle partitions) that was 1096 forks.
+    ``stream_writer`` puts every medallion sink on the FileSystem-based
+    manager, whose local rename forks nothing. A control ``readlink``
+    through Hadoop's own helper shows the recording sees such forks."""
+    from crypto_streaming_lakehouse_spark.streaming.pipeline import (
+        start_records_to_bronze,
+    )
+
+    _write_records(spark, str(tmp_path / "records"))
+    records = (
+        spark.readStream.schema(
+            "key BINARY, value BINARY, topic STRING, partition INT, "
+            "offset BIGINT, timestamp TIMESTAMP, timestampType INT"
+        )
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(tmp_path / "records"))
+    )
+    d = {k: str(tmp_path / k) for k in ("bronze", "silver", "gold", "ckpt")}
+    control = str(tmp_path / "records")
+    jvm = spark.sparkContext._jvm
+
+    def drain(q):
+        assert q.awaitTermination(120)
+        assert q.exception() is None
+        return q
+
+    with _process_starts(spark, tmp_path / "replay.jfr") as commands:
+        jvm.org.apache.hadoop.fs.FileUtil.readLink(jvm.java.io.File(control))
+        drain(
+            start_records_to_bronze(
+                records,
+                bronze_dir=d["bronze"],
+                checkpoint=d["ckpt"] + "/bronze",
+                trigger={"availableNow": True},
+            )
+        )
+        silver = drain(
+            start_silver_job(
+                spark,
+                bronze_dir=d["bronze"],
+                silver_dir=d["silver"],
+                checkpoint=d["ckpt"] + "/silver",
+                max_files_per_trigger=1,
+            )
+        )
+        drain(
+            start_gold_job(
+                spark,
+                silver_dir=d["silver"],
+                gold_dir=d["gold"],
+                checkpoint=d["ckpt"] + "/gold",
+            )
+        )
+
+    assert sum(1 for p in silver.recentProgress if p.numInputRows > 0) == 3
+    assert spark.read.parquet(d["gold"]).count() > 0
+    readlinks = [c for c in commands if c.split()[0].endswith("readlink")]
+    forked = [c for c in readlinks if control not in c]
+    assert len(readlinks) - len(forked) == 1  # the control
+    assert not forked, f"{len(forked)} readlink forks: {forked[:3]}"
+
+
+def test_silver_resumes_checkpoint_of_default_file_manager(
+    spark, bronze_dir, tmp_path
+):
+    """A silver checkpoint written under Spark's default (FileContext)
+    checkpoint file manager resumes through start_silver_job, which puts
+    the session on the FileSystem-based one: both read and write the same
+    files, and Spark does not record the manager in the offset log. The
+    resumed batch continues the batch ids and silver equals the batch
+    dedup (bronze in two halves and a 40-day watermark, as in
+    test_checkpoint_keeps_its_state_provider)."""
+    import os
+    import shutil
+
+    from crypto_streaming_lakehouse_spark.sources.formats import (
+        CHECKPOINT_FILE_MANAGER_KEY,
+        FS_CHECKPOINT_FILE_MANAGER,
+    )
+
+    _, bronze = bronze_dir
+    files = sorted(f for f in os.listdir(bronze) if f.endswith(".parquet"))
+    half = len(files) // 2
+    src = tmp_path / "bronze"
+    src.mkdir()
+    silver_dir = str(tmp_path / "silver")
+    ckpt = str(tmp_path / "ckpt")
+
+    for f in files[:half]:
+        shutil.copy(os.path.join(bronze, f), src / f)
+    configure_state_store(spark)
+    bronze_stream = spark.readStream.schema(BRONZE_SCHEMA).parquet(str(src))
+    writer = stream_writer(
+        dedup_trades(bronze_to_silver(bronze_stream), watermark="40 days"),
+        path=silver_dir,
+        checkpoint=ckpt,
+        partition_by=["event_date"],
+    )
+    # phase 1 runs under Spark's default manager
+    spark.conf.unset(CHECKPOINT_FILE_MANAGER_KEY)
+    q1 = writer.start()
+    assert q1.awaitTermination(120)
+    assert [p.batchId for p in q1.recentProgress if p.numInputRows > 0] == [0]
+    last_id = q1.lastProgress.batchId
+
+    for f in files[half:]:
+        shutil.copy(os.path.join(bronze, f), src / f)
+    q2 = start_silver_job(
+        spark,
+        bronze_dir=str(src),
+        silver_dir=silver_dir,
+        checkpoint=ckpt,
+        watermark="40 days",
+    )
+    assert spark.conf.get(CHECKPOINT_FILE_MANAGER_KEY) == FS_CHECKPOINT_FILE_MANAGER
+    assert q2.awaitTermination(120)
+    assert q2.exception() is None
+    resumed = [p.batchId for p in q2.recentProgress if p.numInputRows > 0]
+    assert resumed == [last_id + 1]
+
+    streamed = spark.read.parquet(silver_dir)
+    batch = dedup_trades(bronze_to_silver(_read_bronze(spark, bronze)))
+    cols = [*DEDUP_KEY, "exchange", "order_type", "event_date"]
+    assert _rowset(streamed, cols) == _rowset(batch, cols)
+
+
 def test_query_listener_and_state_metrics(spark, bronze_dir, tmp_path):
     """Observability contract: a StreamingQueryListener receives start /
     progress / termination callbacks, progress reports carry per-operator
@@ -1080,6 +1267,13 @@ def test_stream_probe_short(spark, tmp_path):
         out = attempt(25, "p2")
     assert out["bronze"]["rows_processed"] > 0
     assert out["silver_rows_landed"] > 0
+    # Per-batch fixed costs: bronze commits its logs but keeps no state.
+    assert out["bronze"]["commit_ms_p50"] is not None
+    assert out["bronze"]["state_commit_ms_p50"] is None
+    for stage in ("silver", "gold"):
+        assert {"commit_ms_p50", "state_commit_ms_p50"} <= out[stage].keys()
+        if out[stage]["batches"]:
+            assert out[stage]["state_commit_ms_p50"] is not None
     # Sink layout is reported next to the row counts.
     assert out["silver_files_landed"] > 0
     assert out["gold_files_landed"] <= out["gold_rows_landed"]
