@@ -97,6 +97,44 @@ BENCH_CONF = {
 }
 
 
+def bench_cpus() -> int:
+    """Cores every bench side runs on: $SPARK_GRAFT_CPUS, else the host's."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def bench_duckdb_connect(sf_dir: str):
+    """The DuckDB yardstick over ``sf_dir``'s tables, on bench_cpus()
+    threads: DuckDB's default is every host core, which would compare
+    Spark on $SPARK_GRAFT_CPUS cores with DuckDB on all of them."""
+    from tests.oracle import duckdb_connect
+
+    con = duckdb_connect(sf_dir)
+    con.sql(f"SET threads={bench_cpus()}")
+    return con
+
+
+def emit_json(metric: str, timings: dict[str, float], sf_dir: str, **extra) -> None:
+    """Print a bench's ONE JSON line: the total and per-query seconds,
+    and the scale factor parsed from ``sf_dir``'s name."""
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    try:
+        sf_val: float | str = float(sf)
+    except ValueError:
+        sf_val = sf
+    print(
+        json.dumps(
+            {
+                "metric": metric,
+                "value": round(sum(timings.values()), 3),
+                "unit": "sec",
+                "queries": timings,
+                "sf": sf_val,
+                **extra,
+            }
+        )
+    )
+
+
 def bench_session(app: str = "bench"):
     """The bench's SparkSession on local[$SPARK_GRAFT_CPUS]."""
     # Bench sessions read the engine's own storage layout: the fixture
@@ -122,7 +160,7 @@ def bench_session(app: str = "bench"):
     # (+0.37 s), a net accept under the ≥5 s criterion.
     return get_spark(
         app,
-        cpus=os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)),
+        cpus=bench_cpus(),
         shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "12")),
         extra_conf=BENCH_CONF,
     )
@@ -172,9 +210,6 @@ def main() -> None:
         for n, d in REGISTRY.items():
             by_family.setdefault(d.tags[0] if d.tags else "misc", n)
         names = list(by_family.values())
-    extra = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
-    if extra:
-        names = [n for n in extra.split(",") if n in REGISTRY]
 
     # Warmup pass: JIT, whole-stage codegen compilation, classloading, and
     # parquet footer caches are one-time driver costs, not per-query work —
@@ -200,21 +235,8 @@ def main() -> None:
 
     timings = {name: round(run_query(spark, name, sf_dir), 3) for name in names}
 
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    try:
-        sf_val: float | str = float(sf)
-    except ValueError:
-        sf_val = sf
-    print(
-        json.dumps(
-            {
-                "metric": "smoke_queries_total" if smoke else "headline_queries_total",
-                "value": round(sum(timings.values()), 3),
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf_val,
-            }
-        )
+    emit_json(
+        "smoke_queries_total" if smoke else "headline_queries_total", timings, sf_dir
     )
     spark.stop()
 

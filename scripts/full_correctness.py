@@ -51,7 +51,6 @@ import multiprocessing as mp
 import os
 import subprocess
 import sys
-import threading
 import time
 import traceback
 
@@ -61,7 +60,7 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
 from crypto_streaming_lakehouse_spark.provenance import impl_sha  # noqa: E402
-from tests.oracle import canonical_digest  # noqa: E402
+from tests.oracle import canonical_digest, capped, duckdb_connect  # noqa: E402
 
 _ARTIFACT_BY_SCALE = {
     "sf0.01": "CORRECTNESS_FULL_LOCAL.json",
@@ -258,70 +257,19 @@ def _oracle_digest(con, sql: str, timeout_s: float, pool):
     canonical digest — O(batch) memory at any result size (VERDICT
     r13 item 4: the sorted-list compare materialized ~57 GB for
     q_edit_distance_join at sf1.0 and needed a bespoke 32 GB-driver
-    shard). A positive ``timeout_s`` bounds DUCKDB-SIDE time only: the
-    interrupt is armed around con.sql() and each fetchmany() call
-    with the REMAINING budget, and disarmed while the Python digest
-    of a batch runs — otherwise our own canonicalization cost would
-    count against the engine's cap and demote rows whose oracle is
-    actually fast (observed on the first round-14 sf1.0 shards:
+    shard). A positive ``timeout_s`` bounds DUCKDB-SIDE time only
+    (``tests.oracle.capped``): con.sql() and each fetchmany() call
+    share the budget, and the Python digest of a batch runs outside
+    it — otherwise our own canonicalization cost would count against
+    the engine's cap and demote rows whose oracle is actually fast
+    (observed on the first round-14 sf1.0 shards:
     q_dedup_embedding_cosine DNF'd under the cap that its oracle
-    passed in round 13, purely from in-cap digest time). The
-    interrupt is guarded so it cannot fire after a call finishes and
-    poison the shared connection (bench_duckdb.py race fix). Raises
+    passed in round 13, purely from in-cap digest time). Raises
     ``duckdb.InterruptException`` when the budget runs out."""
-    lock = threading.Lock()
-    state = {"armed": False, "fired": False}
-    budget = [timeout_s]
-
-    def _interrupt() -> None:
-        with lock:
-            if state["armed"]:
-                state["fired"] = True
-                con.interrupt()
-
-    def _capped(fn):
-        """Run one DuckDB call under the remaining budget."""
-        if timeout_s <= 0:
-            return fn()
-        if budget[0] <= 0:
-            raise duckdb.InterruptException()
-        t0 = time.monotonic()
-        with lock:
-            state["armed"] = True
-            state["fired"] = False
-        timer = threading.Timer(budget[0], _interrupt)
-        timer.start()
-        try:
-            return fn()
-        finally:
-            with lock:
-                state["armed"] = False
-                fired = state["fired"]
-            timer.cancel()
-            budget[0] -= time.monotonic() - t0
-            # The timer can still have fired between the call
-            # returning and the lock acquisition; a no-query
-            # interrupt is buffered and would kill the NEXT call.
-            # Drain it (ADVICE r10) — but ONLY when the timer
-            # actually fired: the drain runs another statement on
-            # the shared connection, which CLOSES the in-flight
-            # streaming result this digest is still fetching from,
-            # truncating the oracle stream and flipping hash_match
-            # on perfectly fast rows (observed on the first capped
-            # sf1.0 update: 6 sub-second document queries FAILed
-            # under a 600 s cap and passed uncapped — r14
-            # optimization round). When the timer fired, the row is
-            # a timeout and the result is abandoned anyway.
-            if fired:
-                try:
-                    con.sql("SELECT 1").fetchall()
-                except duckdb.InterruptException:
-                    pass
-
-    rel = _capped(lambda: con.sql(sql))
-    # Only the fetch is capped; the digest runs outside the armed window.
+    run = capped(con, timeout_s)
+    rel = run(lambda: con.sql(sql))
     n, digest = _pooled_digest(
-        rel.columns, lambda: _capped(lambda: rel.fetchmany(10_000)), pool
+        rel.columns, lambda: run(lambda: rel.fetchmany(10_000)), pool
     )
     return rel.columns, n, digest
 
@@ -434,7 +382,6 @@ def main() -> int:
 
     from crypto_streaming_lakehouse_spark.registry import REGISTRY
     from crypto_streaming_lakehouse_spark.session import get_spark
-    from tests.oracle import duckdb_connect
 
     timeout_s = float(os.environ.get("SPARK_GRAFT_DUCKDB_TIMEOUT_S", "0"))
     run = names  # None: every registry query

@@ -17,7 +17,8 @@ Modes:
                     timed run pays its own materializations; the job
                     group then spans all four runs
   --duckdb          add the DuckDB oracle's min-of-3 on the same parquet
-                    (``duckdb_s``) and the Spark/DuckDB ``ratio``
+                    and the same $SPARK_GRAFT_CPUS cores (``duckdb_s``)
+                    and the Spark/DuckDB ``ratio``
 
 Usage: python scripts/profile_bench.py [--queries a,b,c|all] [--cold]
        [--duckdb] [--sf-dir DIR] [--out FILE] [--plans DIR]
@@ -57,7 +58,9 @@ def main() -> None:
     ap.add_argument("--duckdb", action="store_true")
     args = ap.parse_args()
 
-    from bench import HEADLINE, bench_session, run_query, time_cold
+    from bench import (
+        HEADLINE, bench_duckdb_connect, bench_session, run_query, time_cold,
+    )
 
     spark = bench_session("profile-bench")
 
@@ -74,11 +77,7 @@ def main() -> None:
     plans_dir = pathlib.Path(args.plans) if args.plans else None
     if plans_dir:
         plans_dir.mkdir(parents=True, exist_ok=True)
-    con = None
-    if args.duckdb:
-        from tests.oracle import duckdb_connect
-
-        con = duckdb_connect(args.sf_dir)
+    con = bench_duckdb_connect(args.sf_dir) if args.duckdb else None
 
     def profile(name: str) -> dict:
         sc.setJobGroup(name, name)

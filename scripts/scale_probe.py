@@ -34,7 +34,7 @@ DEFAULT_QUERIES = [
 
 
 def main() -> None:
-    from bench import bench_session, time_cold
+    from bench import bench_cpus, bench_session, time_cold
 
     names = sys.argv[1:] or DEFAULT_QUERIES
     # Shuffle width = cpus, the sizing SCALE.md's rows were measured
@@ -42,10 +42,7 @@ def main() -> None:
     # and the bench session's scan cache re-slices both the same way:
     # mixed layouts skewed factors by up to 5× (minhash "6.5×" under
     # mixed layout vs 1.8× under uniform layout).
-    os.environ.setdefault(
-        "SPARK_GRAFT_SHUFFLE",
-        os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)),
-    )
+    os.environ.setdefault("SPARK_GRAFT_SHUFFLE", str(bench_cpus()))
     spark = bench_session("scale-probe")
 
     from crypto_streaming_lakehouse_spark.registry import REGISTRY

@@ -9,6 +9,8 @@ means driver-side CORRECTNESS_r{N}.json should never surprise us.
 from __future__ import annotations
 
 import math
+import threading
+import time
 from datetime import date, datetime
 from decimal import Decimal
 
@@ -25,6 +27,70 @@ def duckdb_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
     return con
+
+
+def capped(con: duckdb.DuckDBPyConnection, timeout_s: float):
+    """A runner of DuckDB calls on ``con`` that share one budget of
+    ``timeout_s`` seconds: ``run = capped(con, t); run(fn)`` calls ``fn``
+    with the interrupt armed for the REMAINING budget and disarmed once it
+    returns, so time spent between calls (a Python digest of a fetched
+    batch) does not count against the engine's cap. Raises
+    ``duckdb.InterruptException`` when the budget runs out. A
+    ``timeout_s`` of 0 or less runs ``fn`` uncapped.
+
+    The interrupt is guarded so it cannot fire after a call finishes and
+    poison the shared connection: an unguarded timer could fire between
+    the call returning and the timer's cancel, and the NEXT call would
+    die with a spurious InterruptException."""
+    lock = threading.Lock()
+    state = {"armed": False, "fired": False}
+    budget = [timeout_s]
+
+    def _interrupt() -> None:
+        with lock:
+            if state["armed"]:
+                state["fired"] = True
+                con.interrupt()
+
+    def run(fn):
+        if timeout_s <= 0:
+            return fn()
+        if budget[0] <= 0:
+            raise duckdb.InterruptException()
+        t0 = time.monotonic()
+        with lock:
+            state["armed"] = True
+            state["fired"] = False
+        timer = threading.Timer(budget[0], _interrupt)
+        timer.start()
+        try:
+            return fn()
+        finally:
+            with lock:
+                state["armed"] = False
+                fired = state["fired"]
+            timer.cancel()
+            budget[0] -= time.monotonic() - t0
+            # The timer can still have fired between the call
+            # returning and the lock acquisition; a no-query
+            # interrupt is buffered and would kill the NEXT call.
+            # Drain it (ADVICE r10) — but ONLY when the timer
+            # actually fired: the drain runs another statement on
+            # the shared connection, which CLOSES the in-flight
+            # streaming result a caller may still be fetching from,
+            # truncating the oracle stream and flipping hash_match
+            # on perfectly fast rows (observed on the first capped
+            # sf1.0 update: 6 sub-second document queries FAILed
+            # under a 600 s cap and passed uncapped — r14
+            # optimization round). When the timer fired, the call
+            # was interrupted and its result is abandoned anyway.
+            if fired:
+                try:
+                    con.sql("SELECT 1").fetchall()
+                except duckdb.InterruptException:
+                    pass
+
+    return run
 
 
 def _canon(v):

@@ -14,6 +14,7 @@ import json
 import pathlib
 import subprocess
 import sys
+import time
 
 import pytest
 
@@ -295,3 +296,25 @@ def test_pooled_oracle_digest_equals_canonical_digest(timeout_s):
     assert used, "single-batch path taken; the pool was never used"
     assert cols == ["i", "d", "s", "arr"]
     assert (n, digest) == want
+
+
+def test_capped_call_is_interrupted_and_connection_recovers():
+    """``tests.oracle.capped``: a DuckDB call that outlives its ~0.2 s
+    budget raises InterruptException, the spent budget refuses the next
+    capped call, and the next statement on the same connection succeeds
+    (no buffered interrupt is left to kill it)."""
+    import duckdb
+
+    from tests.oracle import capped
+
+    con = duckdb.connect()
+    con.sql("SET threads=1")
+    run = capped(con, 0.2)
+    slow = "SELECT sum(hash(i)) FROM range(10000000000) t(i)"
+    t0 = time.monotonic()
+    with pytest.raises(duckdb.InterruptException):
+        run(lambda: con.sql(slow).fetchall())
+    assert time.monotonic() - t0 < 30
+    with pytest.raises(duckdb.InterruptException):
+        run(lambda: con.sql("SELECT 1").fetchall())
+    assert con.sql("SELECT 42").fetchall() == [(42,)]
