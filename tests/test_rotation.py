@@ -1,148 +1,90 @@
-"""Guard the per-round driver-verification rotation (VERDICT r04 item 5).
-
-The driver caps correctness checks at the first 50 ``queries()`` names,
-so ``__spark_entry__._ROUND_HEAD`` must (a) be exactly 50 names, (b) all
-exist in the registry with oracles, and (c) spend its slots only on
-names that have never been driver-GREEN — except deliberate, documented
-re-includes of previously-red entries. The ledger of driver-green names
-per round lives in ``tests/driver_verified_ledger.json`` (regenerated
-from the CORRECTNESS_r*.json artifacts each round).
+"""The driver hash-checks only the first 50 ``queries()`` names, and
+``__spark_entry__`` ranks the registry from the ``CORRECTNESS_r*.json``
+artifacts (module docstring). These tests check properties of that rule on
+the repo's artifacts and on synthetic ones in ``tmp_path``; none starts
+Spark.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import pathlib
+import shutil
 
-LEDGER = pathlib.Path(__file__).parent / "driver_verified_ledger.json"
+import pytest
 
-# Names the current head deliberately repeats: red/errored in a prior
-# driver artifact, since fixed, re-included to earn a green row.
-ALLOWED_REINCLUDES = {
-    "q_decimal_exact",  # r04 hash-red (driver DECIMAL canonicalization)
-    "q_approx_count_distinct",  # r01 'no_oracle' (pre-redesign)
-    "q_percentile_approx",  # r01 list-column hash error (pre-redesign)
-    "q_hll_sketch_union",  # r06 hash-red (HUGEINT sum in oracle), fixed r07
-}
+import __spark_entry__ as e
+from crypto_streaming_lakehouse_spark.registry import REGISTRY
 
-
-def _load_head():
-    import __spark_entry__ as e
-
-    return e._ROUND_HEAD
+ROOT = pathlib.Path(__file__).parents[1]
+CAP = 50
+ORACLE = [n for n, d in REGISTRY.items() if d.sql is not None]
 
 
-def _driver_green() -> set[str]:
-    ledger = json.loads(LEDGER.read_text())
-    out: set[str] = set()
-    for names in ledger.values():
-        out.update(names)
-    return out
+def _head() -> list[str]:
+    return list(e.queries())[:CAP]
 
 
-def _green_counts() -> dict[str, int]:
-    ledger = json.loads(LEDGER.read_text())
-    counts: dict[str, int] = {}
-    for names in ledger.values():
-        for n in names:
-            counts[n] = counts.get(n, 0) + 1
-    return counts
+def _write(directory, rnd: int, rows: dict[str, bool]) -> None:
+    rows = {n: {"hash_match": ok} for n, ok in rows.items()}
+    (directory / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
 
 
-def test_round_head_fills_the_50_cap():
-    """The head must use every driver slot available: exactly 50 names.
-    While a never-green pool >= 50 exists, all slots go to it; once the
-    pool is smaller (saturation, reached at r09), the head must still
-    contain the whole pool and fill the remaining slots with re-verify
-    names (see test_round_head_spends_slots_on_unverified_names for
-    which re-verifies are legitimate)."""
-    from crypto_streaming_lakehouse_spark.registry import REGISTRY
-
-    head = _load_head()
-    assert len(set(head)) == len(head), "duplicate names in _ROUND_HEAD"
-    green = _driver_green()
-    pool = {
-        n
-        for n, d in REGISTRY.items()
-        if d.sql is not None and n not in green
-    }
-    assert len(head) == 50, f"head has {len(head)} names, cap is 50"
-    if len(pool) < 50:
-        missing = pool - set(head)
-        assert not missing, (
-            f"never-green names left out of the head: {missing}"
-        )
+def test_queries_covers_the_registry():
+    assert e.queries() == {n: d.fn for n, d in REGISTRY.items()}
+    assert e.oracle_sql() == {n: REGISTRY[n].sql for n in ORACLE}
 
 
 def test_round_head_names_exist_with_oracles():
-    from crypto_streaming_lakehouse_spark.registry import REGISTRY
-
-    head = _load_head()
-    missing = [n for n in head if n not in REGISTRY]
-    assert not missing, f"head names not in registry: {missing}"
-    # A head slot without an oracle would burn a driver row on a weaker
-    # rows-only check — every rotated-in name must be hash-checkable.
-    no_oracle = [n for n in head if REGISTRY[n].sql is None]
-    assert not no_oracle, f"head names without oracle SQL: {no_oracle}"
+    head = _head()
+    assert len(set(head)) == CAP and set(head) <= set(ORACLE)
 
 
 def test_round_head_spends_slots_on_unverified_names():
-    """Pre-saturation (never-green pool >= 50): every slot must go to a
-    never-green name (modulo documented re-includes). Post-saturation
-    (pool < 50, reached at r09 with 319/319 cumulative): leftover slots
-    RE-VERIFY, and a legitimate re-verify is a name with the MINIMUM
-    ledger coverage (green exactly once) — evidence accumulates where
-    it is thinnest, never on 3×/4×-verified names."""
-    from crypto_streaming_lakehouse_spark.registry import REGISTRY
-
-    head = _load_head()
-    green = _driver_green()
-    counts = _green_counts()
-    pool_size = sum(
-        1
-        for n, d in REGISTRY.items()
-        if d.sql is not None and n not in green
+    """No oracle-backed name outside the head has fewer green driver rows
+    than a name inside it."""
+    evidence = e._green_evidence()
+    counts = {n: evidence.get(n, (0, 0))[0] for n in ORACLE}
+    head = set(_head())
+    assert max(counts[n] for n in head) <= min(
+        c for n, c in counts.items() if n not in head
     )
-    import __spark_entry__ as e
-
-    # Names whose implementation/oracle changed since their last green
-    # row re-earn a hash on CURRENT code regardless of coverage — fresher
-    # evidence than re-verifying an unchanged singleton (r10 policy).
-    round_changed = set(getattr(e, "_ROUND_CHANGED", ()))
-    if pool_size >= 50:
-        wasted = [
-            n
-            for n in head
-            if n in green
-            and n not in ALLOWED_REINCLUDES
-            and n not in round_changed
-        ]
-        assert not wasted, (
-            "head repeats already-driver-green names (wasted rotation "
-            f"slots): {wasted}"
-        )
-    else:
-        min_cov = min(counts[n] for n in counts)
-        over = [
-            n
-            for n in head
-            if n in green
-            and counts.get(n, 0) > min_cov
-            and n not in ALLOWED_REINCLUDES
-            and n not in round_changed
-        ]
-        assert not over, (
-            "re-verify slots spent on names above the minimum ledger "
-            f"coverage ({min_cov}): {over}"
-        )
 
 
-def test_queries_dict_leads_with_round_head():
-    import __spark_entry__ as e
-
-    head = _load_head()
-    ordered = list(e.queries().keys())
-    assert tuple(ordered[: len(head)]) == head, (
-        "queries() dict order does not lead with _ROUND_HEAD — the "
-        "driver's 50-cap would verify the wrong set"
+def test_round_head_skips_the_last_rounds_green_names():
+    last = max(
+        ROOT.glob("CORRECTNESS_r*.json"),
+        key=lambda p: int(p.stem.removeprefix("CORRECTNESS_r")),
     )
+    green = {n for n, row in json.loads(last.read_text()).items() if row["hash_match"]}
+    assert not set(_head()) & green
+
+
+@pytest.mark.parametrize("artifact", [None, {ORACLE[0] + "_removed": True}])
+def test_without_evidence_the_head_is_registry_order(tmp_path, monkeypatch, artifact):
+    """No artifact, or one naming only names gone from the registry; a
+    rows-only name goes last."""
+    if artifact:
+        _write(tmp_path, 1, artifact)
+    monkeypatch.setattr(e, "ARTIFACT_DIR", tmp_path)
+    first, *rest = REGISTRY
+    monkeypatch.setitem(REGISTRY, first, dataclasses.replace(REGISTRY[first], sql=None))
+    assert list(e.queries()) == [*rest, first]
+
+
+def test_red_name_leads_then_oldest_green(tmp_path, monkeypatch):
+    fresh, *green, red = ORACLE
+    _write(tmp_path, 1, {**dict.fromkeys(green, True), red: False})
+    _write(tmp_path, 2, {fresh: True})
+    monkeypatch.setattr(e, "ARTIFACT_DIR", tmp_path)
+    assert _head() == [red, *green[: CAP - 1]]
+
+
+def test_each_new_artifact_rotates_the_head(tmp_path, monkeypatch):
+    for path in ROOT.glob("CORRECTNESS_r*.json"):
+        shutil.copy(path, tmp_path)
+    old = _head()
+    _write(tmp_path, 99, dict.fromkeys(old, True))
+    monkeypatch.setattr(e, "ARTIFACT_DIR", tmp_path)
+    assert not set(_head()) & set(old)
