@@ -8,6 +8,11 @@ The same plan-builder functions bind to batch (``spark.read``) or streaming
 (``spark.readStream``) sources — Structured Streaming incrementalizes the
 identical logical plan, which is what makes the stream≡batch equivalence
 tests meaningful.
+
+``bronze_to_silver`` parses in one projection and flattens in the next.
+Fields read straight off one ``from_json`` each become their own pruned
+parse (Spark's OptimizeJsonExprs: eight per record); CollapseProject does
+not merge a parse that the flatten reads more than once, so it runs once.
 """
 
 from __future__ import annotations
@@ -16,6 +21,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .schemas import DEDUP_KEY, TRADE_PAYLOAD_SCHEMA
+
+#: Bronze columns silver carries through unchanged, in silver's order.
+_LINEAGE = ("topic", "partition", "offset", "ts_kafka", "key", "value_raw")
+#: Epoch-ms payload fields and the silver timestamps they become.
+_MS_TO_TIME = {"ts_event": "event_time", "ts_ingest": "ingest_time"}
 
 
 def kafka_records_to_bronze(records: DataFrame) -> DataFrame:
@@ -41,23 +51,15 @@ def bronze_to_silver(bronze: DataFrame) -> DataFrame:
     from_json on value_raw, flatten the payload struct, convert epoch-ms
     longs to timestamps, derive the event_date partition column.
     """
-    p = F.from_json(F.col("value_raw"), TRADE_PAYLOAD_SCHEMA).alias("p")
-    return bronze.select(
-        "topic",
-        "partition",
-        "offset",
-        "ts_kafka",
-        "key",
-        "value_raw",
-        p.getField("exchange").alias("exchange"),
-        p.getField("symbol").alias("symbol"),
-        p.getField("price").alias("price"),
-        p.getField("size").alias("size"),
-        p.getField("side").alias("side"),
-        p.getField("order_type").alias("order_type"),
-        F.timestamp_millis(p.getField("ts_event")).alias("event_time"),
-        F.timestamp_millis(p.getField("ts_ingest")).alias("ingest_time"),
-    ).withColumn("event_date", F.to_date(F.col("event_time")))
+    return (
+        bronze.select(
+            *_LINEAGE, F.from_json("value_raw", TRADE_PAYLOAD_SCHEMA).alias("p")
+        )
+        .select(*_LINEAGE, "p.*")
+        .withColumnsRenamed(_MS_TO_TIME)
+        .withColumns({c: F.timestamp_millis(c) for c in _MS_TO_TIME.values()})
+        .withColumn("event_date", F.to_date("event_time"))
+    )
 
 
 def dedup_trades(silver: DataFrame, *, watermark: str | None = None) -> DataFrame:

@@ -10,6 +10,8 @@ concurrently for ``--duration`` seconds, samples every query's
 
 - per-stage sustained throughput (median + max of the per-batch
   ``processedRowsPerSecond`` across the steady-state window),
+- per-stage batch duration: the median ``triggerExecution`` over the
+  steady batches, so a batch that outlasts its trigger interval shows,
 - per-stage fixed commit cost per batch: the median offset-WAL plus
   commit-log write (``walCommit`` + ``commitOffsets``) and the median
   state-store commit summed over the stateful operator's tasks
@@ -189,6 +191,7 @@ def run_probe(
             + p["durationMs"].get("commitOffsets", 0)
             for p in steady
         ]
+        batch_ms = [p["durationMs"]["triggerExecution"] for p in steady]
         state_commits = [
             p["stateOperators"][0]["commitTimeMs"]
             for p in steady
@@ -201,6 +204,7 @@ def run_probe(
             if rates
             else None,
             "rows_per_sec_max": round(max(rates), 1) if rates else None,
+            "batch_ms_p50": statistics.median(batch_ms) if batch_ms else None,
             "commit_ms_p50": statistics.median(commits) if commits else None,
             "state_commit_ms_p50": statistics.median(state_commits)
             if state_commits

@@ -9,9 +9,11 @@ from pyspark.sql import functions as F
 from crypto_streaming_lakehouse_spark.extensions import dedup as D
 from crypto_streaming_lakehouse_spark.operators.asof import asof_join_backward
 from crypto_streaming_lakehouse_spark.operators.bars import ohlcv_bars
+from crypto_streaming_lakehouse_spark.schemas import TRADE_PAYLOAD_SCHEMA
 from crypto_streaming_lakehouse_spark.transforms import bronze_to_silver
 
 from .conftest import SF_DIR
+from .oracle import canonical_rows
 
 
 def _trades(spark, rows):
@@ -45,22 +47,56 @@ def test_ohlcv_zero_size_vwap_null(spark):
     assert out.vwap is None  # guarded division, no ANSI error, no NaN
 
 
+def _per_field_silver(bronze):
+    """Silver as it was built before it parsed once: each payload field
+    read straight off one from_json, which Spark's JSON optimizer splits
+    into one single-field parse per field. Kept as the reference for
+    which fields survive a partly bad payload."""
+    p = F.from_json(F.col("value_raw"), TRADE_PAYLOAD_SCHEMA)
+    return bronze.select(
+        "topic", "partition", "offset", "ts_kafka", "key", "value_raw",
+        *(p.getField(f).alias(f)
+          for f in ("exchange", "symbol", "price", "size", "side", "order_type")),
+        F.timestamp_millis(p.getField("ts_event")).alias("event_time"),
+        F.timestamp_millis(p.getField("ts_ingest")).alias("ingest_time"),
+    ).withColumn("event_date", F.to_date(F.col("event_time")))
+
+
 def test_bronze_to_silver_malformed_json(spark):
-    rows = [
-        ("t", 0, 1, None, 0, "k", "not json at all"),
-        ("t", 0, 2, None, 0, "k", '{"symbol": "BTC"'),  # truncated
-        ("t", 0, 3, None, 0, "k", None),
+    payloads = [
+        "not json at all",
+        '{"symbol": "BTC"',  # truncated
+        None,
+        # partial results: a bad field is null, the others still parse
+        '{"symbol": "BTC", "price": "abc", "size": 1.0, "side": "buy",'
+        ' "ts_event": 1700000000000}',
+        '{"symbol": "ETH", "price": 2.5}',
+        '{"symbol": "SOL", "price": 3.0, "meta": {"venue": {"id": 7}},'
+        ' "size": 4.0}',
+        '{"symbol": "ADA", "price": 1.0, "price": 2.0}',
+        '{"symbol": "XRP", "size": "5", "ts_event": "1700000000000"}',
+        '{"symbol": "DOT", "price": 6.0} trailing text',
+        '{"symbol": "LTC", "price": "NaN", "size": 1.0}',
     ]
     bronze = spark.createDataFrame(
-        rows,
+        [("t", 0, i, None, 0, "k", v) for i, v in enumerate(payloads)],
         "topic string, partition int, offset long, ts_kafka timestamp, "
         "ts_type int, key string, value_raw string",
     )
     out = bronze_to_silver(bronze)
     # malformed payloads survive as rows with null parsed columns (audit
     # lineage retained), matching the reference's permissive from_json
-    assert out.count() == 3
-    assert out.where(F.col("symbol").isNull()).count() == 3
+    assert out.count() == len(payloads)
+    assert out.where(F.col("offset") < 3).where(
+        F.col("symbol").isNull()
+    ).count() == 3
+    assert canonical_rows(out.columns, out.collect()) == canonical_rows(
+        out.columns, _per_field_silver(bronze).collect()
+    )
+    bad_price = out.where(F.col("offset") == 3).first()
+    assert bad_price.price is None
+    assert (bad_price.symbol, bad_price.size, bad_price.side) == ("BTC", 1.0, "buy")
+    assert bad_price.event_date is not None
 
 
 def test_word_ngrams_short_texts(spark):

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import contextlib
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -38,6 +39,7 @@ from crypto_streaming_lakehouse_spark.transforms import (
 )
 
 from .conftest import SF_DIR
+from .oracle import compare
 
 
 @pytest.fixture(scope="module")
@@ -144,6 +146,75 @@ def test_silver_stream_matches_batch(spark, bronze_dir):
     n_bronze = _read_bronze(spark, bronze).count()
     assert streamed.count() < n_bronze
     assert streamed.count() == streamed.select(DEDUP_KEY).distinct().count()
+
+
+def test_batch_silver_matches_duckdb_json_extract(spark, bronze_dir):
+    """Batch silver against an oracle that shares no code with
+    bronze_to_silver: DuckDB's JSON functions over the same bronze files,
+    typed fields plus epoch-ms -> timestamp. The stream≡batch test runs
+    both of its sides through bronze_to_silver, so a parse defect they
+    share passes there and fails here."""
+    _, bronze = bronze_dir
+    con = duckdb.connect()
+    con.sql("SET TimeZone='UTC'")
+    field = "json_extract(value_raw, '$.{}')".format
+    text = "json_extract_string(value_raw, '$.{}') AS {}".format
+    oracle = f"""
+        SELECT *, CAST(event_time AS DATE) AS event_date FROM (
+          SELECT topic, "partition", "offset", ts_kafka, "key", value_raw,
+                 {text("exchange", "exchange")}, {text("symbol", "symbol")},
+                 CAST({field("price")} AS DOUBLE) AS price,
+                 CAST({field("size")} AS DOUBLE) AS size,
+                 {text("side", "side")}, {text("order_type", "order_type")},
+                 epoch_ms(CAST({field("ts_event")} AS BIGINT)) AS event_time,
+                 epoch_ms(CAST({field("ts_ingest")} AS BIGINT)) AS ingest_time
+          FROM read_parquet('{bronze}/*.parquet'))"""
+    compare(bronze_to_silver(_read_bronze(spark, bronze)), con, oracle)
+
+
+def _from_json_calls(plan) -> int:
+    return plan.toString().count("from_json(")
+
+
+def test_silver_parses_each_record_once(spark, bronze_dir, tmp_path):
+    """Silver parses each payload once, in batch, backfill and stream.
+    Eight fields read straight off one from_json become eight single-field
+    parses under Spark's JSON optimizer. The stream's plan comes from its
+    last execution, which has to be the data batch: the no-data batch run
+    after the watermark moves holds no parse, so it is off for this query."""
+    _, bronze = bronze_dir
+    silver = bronze_to_silver(_read_bronze(spark, bronze))
+    for df in (silver, dedup_trades(silver)):
+        assert _from_json_calls(df._jdf.queryExecution().optimizedPlan()) == 1
+    # Gold's batch twin parses the whole payload once too; the window's
+    # null filter on event_time, pushed below the parse, adds a
+    # ts_event-only parse of its own.
+    gold = run_batch_pipeline(_read_bronze(spark, bronze))
+    plan = gold._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("from_json(StructField(exchange,") == 1
+
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(no_data)
+    spark.conf.set(no_data, "false")
+    try:
+        q = start_silver_job(
+            spark,
+            bronze_dir=bronze,
+            silver_dir=str(tmp_path / "silver"),
+            checkpoint=str(tmp_path / "ckpt"),
+            trigger={"processingTime": "1 second"},
+        )
+        try:
+            q.processAllAvailable()
+            last = q._jsq.streamingQuery().lastExecution()
+            rows_in = q.lastProgress["numInputRows"]
+        finally:
+            q.stop()
+    finally:
+        spark.conf.set(no_data, prev)
+    assert rows_in > 0
+    assert _from_json_calls(last.optimizedPlan()) == 1
+    assert _from_json_calls(last.executedPlan()) == 1
 
 
 def test_gold_stream_is_watermark_closed_prefix_of_batch(spark, bronze_dir):
@@ -1269,9 +1340,12 @@ def test_stream_probe_short(spark, tmp_path):
     assert out["silver_rows_landed"] > 0
     # Per-batch fixed costs: bronze commits its logs but keeps no state.
     assert out["bronze"]["commit_ms_p50"] is not None
+    assert out["bronze"]["batch_ms_p50"] > 0
     assert out["bronze"]["state_commit_ms_p50"] is None
     for stage in ("silver", "gold"):
-        assert {"commit_ms_p50", "state_commit_ms_p50"} <= out[stage].keys()
+        assert {"batch_ms_p50", "commit_ms_p50", "state_commit_ms_p50"} <= out[
+            stage
+        ].keys()
         if out[stage]["batches"]:
             assert out[stage]["state_commit_ms_p50"] is not None
     # Sink layout is reported next to the row counts.
