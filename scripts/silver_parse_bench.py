@@ -2,16 +2,18 @@
 ``transforms.bronze_to_silver`` over Kafka-shaped payloads into Spark's
 ``noop`` sink.
 
-The bronze input (``--rows`` trade payloads in the stream tests' JSON
+The bronze input (``ROWS`` trade payloads in the stream tests' JSON
 shape, 5 symbols) is written to a temp parquet dir first; each pass then
-reads it, parses it and discards the result. CPU is the driver JVM's
-user + system time from ``/proc/<pid>/stat`` (task, compiler and GC
-threads alike), read before and after each pass. The first pass runs on
-a JVM that has compiled no parse code yet (``cold_cpu_s``);
-``warm_cpu_s`` is the median of the ``--warm`` passes after it.
+reads it, parses it and discards the result. The stream tests' bronze
+fixture draws its ~1 k trades from the TPC-H fixture data; this input is
+synthetic so that its size is free of it. CPU is
+``perfbench.probes.cpu_seconds`` of the driver JVM (task, compiler and
+GC threads alike), read before and after each pass. The first pass runs
+on a JVM that has compiled no parse code yet (``cold_cpu_s``);
+``warm_cpu_s`` is the median of the ``WARM_PASSES`` passes after it.
 
 Usage:
-    python scripts/silver_parse_bench.py [--rows 100000] [--warm 5]
+    python scripts/silver_parse_bench.py
 
 Prints one JSON line, with the plan's ``from_json`` count next to the
 CPU figures.
@@ -19,10 +21,8 @@ CPU figures.
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
-import pathlib
 import statistics
 import sys
 import tempfile
@@ -31,11 +31,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from perfbench.probes import cpu_seconds  # noqa: E402
 
-def jvm_cpu_s(pid: int) -> float:
-    """User + system CPU seconds of process ``pid`` so far."""
-    fields = pathlib.Path(f"/proc/{pid}/stat").read_text().rsplit(")", 1)[1].split()
-    return (int(fields[11]) + int(fields[12])) / os.sysconf("SC_CLK_TCK")
+ROWS = 100_000
+WARM_PASSES = 5
 
 
 def bronze_frame(spark, rows: int):
@@ -64,35 +63,30 @@ def bronze_frame(spark, rows: int):
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--rows", type=int, default=100_000)
-    ap.add_argument("--warm", type=int, default=5)
-    args = ap.parse_args()
-
     from crypto_streaming_lakehouse_spark.schemas import BRONZE_SCHEMA
     from crypto_streaming_lakehouse_spark.session import get_spark
     from crypto_streaming_lakehouse_spark.transforms import bronze_to_silver
 
     cpus = min(4, os.cpu_count() or 4)
     spark = get_spark("silver-parse-bench", cpus=cpus, shuffle_partitions=cpus)
-    pid = spark._jvm.java.lang.ProcessHandle.current().pid()
+    pid = spark.sparkContext._gateway.proc.pid
     with tempfile.TemporaryDirectory(prefix="silver_parse_") as d:
         bronze_dir = os.path.join(d, "bronze")
-        bronze_frame(spark, args.rows).write.parquet(bronze_dir)
+        bronze_frame(spark, ROWS).write.parquet(bronze_dir)
         silver = bronze_to_silver(spark.read.schema(BRONZE_SCHEMA).parquet(bronze_dir))
 
         def pass_cpu_s() -> float:
-            t0 = jvm_cpu_s(pid)
+            t0 = cpu_seconds(pid)
             silver.write.format("noop").mode("overwrite").save()
-            return jvm_cpu_s(pid) - t0
+            return cpu_seconds(pid) - t0
 
         cold = pass_cpu_s()
-        warm = [pass_cpu_s() for _ in range(args.warm)]
+        warm = [pass_cpu_s() for _ in range(WARM_PASSES)]
         plan = silver._jdf.queryExecution().executedPlan().toString()
     print(
         json.dumps(
             {
-                "rows": args.rows,
+                "rows": ROWS,
                 "cpus": cpus,
                 "from_json_calls": plan.count("from_json("),
                 "cold_cpu_s": round(cold, 3),

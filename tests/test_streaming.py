@@ -188,10 +188,11 @@ def test_silver_parses_each_record_once(spark, bronze_dir, tmp_path):
         assert _from_json_calls(df._jdf.queryExecution().optimizedPlan()) == 1
     # Gold's batch twin parses the whole payload once too; the window's
     # null filter on event_time, pushed below the parse, adds a
-    # ts_event-only parse of its own.
+    # ts_event-only parse of its own, and nothing else parses.
     gold = run_batch_pipeline(_read_bronze(spark, bronze))
     plan = gold._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("from_json(StructField(exchange,") == 1
+    assert plan.count("from_json(") == 2
 
     no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
     prev = spark.conf.get(no_data)
